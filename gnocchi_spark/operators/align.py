@@ -145,15 +145,18 @@ def _enforce_overlap(
     query; here every ``partition_cols`` group is checked and ANY
     failing group raises (the API returns 400 for the whole request).
 
-    Shape: one tiny bounds aggregate (one row per group) broadcast back
-    onto the grid, trim/overlap flags as plain columns, and a SINGLE
-    validation action computing raw + trimmed stats per group in one
+    Shape: the grid is materialized once (local checkpoint), then one
+    tiny bounds aggregate (one row per group) is broadcast back onto
+    it, trim/overlap flags are plain columns, and a SINGLE validation
+    action computes raw + trimmed stats per group in one
     conditional-aggregation pass — no per-query scalar probes, no
     empty-partition window.
     """
     pk = list(partition_cols)
     ov = F.forall(F.array(*[F.col(c) for c in labels]), lambda x: x.isNotNull())
-    base = wide.withColumn("__ov", ov)
+    # materialized once: the bounds, the verdict and the caller's action
+    # all read this grid instead of re-running the N series scans
+    base = wide.withColumn("__ov", ov).localCheckpoint(eager=True)
 
     bound_aggs = [
         F.min(F.when(F.col("__ov"), F.col("ts"))).alias("__first_ov"),

@@ -37,6 +37,13 @@ def get_measures(
     ``resample`` re-aggregates the already-aggregated series to a coarser
     granularity using the same method (carbonara.py:594-598 — note this
     is e.g. a mean of means, by design).
+
+    The result is sorted inside one partition rather than by a global
+    ``orderBy``, which would first run a range-sampling job.  That is
+    safe because one (metric, method, granularity) series holds at most
+    its archive policy's points (archive_policy.py:183-263), so a single
+    task sorts it; the matching rows may come from any number of files
+    and partitions.
     """
     df = rollups.where(
         (F.col("metric_id") == metric_id)
@@ -53,7 +60,7 @@ def get_measures(
     if resample is not None:
         df = resample_rollup(df, method, resample)
     df = df.select("bucket_ts", "granularity", "value")
-    return df.orderBy("bucket_ts")
+    return df.repartition(1).sortWithinPartitions("bucket_ts")
 
 
 def granularity_intersection(

@@ -29,8 +29,11 @@ from scratch here):
 
 On a real deployment root would be an object-store prefix; the local
 filesystem here stands in for it (O_EXCL create ≙ conditional PUT).
-Scale notes: a manifest lists file paths only — at 128 sacks x a few
-generations it is KBs; vacuum() bounds data-file growth; the merge
+Scale notes: a manifest lists file paths and the table schema — at 128
+sacks x a few generations it is KBs; every commit writes one file per
+sack it touches, and readers take the file list and schema from the
+manifest, so a read neither lists directories nor infers a schema;
+vacuum() bounds data-file growth; the merge
 plan reads only affected-sack files (manifest-level pruning, cheaper
 than even parquet row-group pruning since unaffected files are never
 opened).
@@ -48,6 +51,7 @@ from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class StoreConflict(Exception):
@@ -70,6 +74,9 @@ def _crash_point(name: str) -> None:
 class Manifest:
     version: int
     files: tuple[str, ...]  # paths relative to root
+    # JSON of the committed frame's schema (sack excluded); None in
+    # manifests written before the field existed, whose readers infer it
+    schema: str | None = None
 
     @property
     def name(self) -> str:
@@ -105,15 +112,22 @@ class SnapshotStore:
         latest = max(names)
         with open(os.path.join(self._manifest_dir(), latest)) as f:
             doc = json.load(f)
-        return Manifest(version=doc["version"], files=tuple(doc["files"]))
+        schema = doc.get("schema")
+        return Manifest(
+            version=doc["version"],
+            files=tuple(doc["files"]),
+            schema=json.dumps(schema) if schema is not None else None,
+        )
 
     def _commit(
         self,
         base: Manifest | None,
         add: Sequence[str],
         remove: Sequence[str] = (),
+        schema: str | None = None,
     ) -> Manifest:
-        """Publish base.files - remove + add as version base+1.
+        """Publish base.files - remove + add as version base+1, recording
+        the committed frame's ``schema`` for readers.
 
         O_EXCL create is the atomic claim: if another writer already
         published this version, raise StoreConflict WITHOUT touching
@@ -125,42 +139,45 @@ class SnapshotStore:
             [p for p in (base.files if base else ()) if p not in set(remove)]
             + list(add)
         )
-        m = Manifest(version=version, files=files)
-        doc = json.dumps(
-            {"version": version, "files": list(files), "committed_at": time.time()}
-        )
+        m = Manifest(version=version, files=files, schema=schema)
+        doc = {"version": version, "files": list(files), "committed_at": time.time()}
+        if schema is not None:
+            doc["schema"] = json.loads(schema)
         path = os.path.join(self._manifest_dir(), m.name)
         try:
             fd = os.open(path, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
         except FileExistsError:
             raise StoreConflict(f"version {version} already committed")
         with os.fdopen(fd, "w") as f:
-            f.write(doc)
+            f.write(json.dumps(doc))
             f.flush()
             os.fsync(f.fileno())
         return m
 
     # -- data-file plumbing ------------------------------------------------
 
-    def _write_data(self, df: DataFrame, one_file_per_sack: bool = False) -> list[str]:
-        """Write df under a fresh commit token, partitioned by sack
-        directories; return the relative paths of the parquet files
-        produced (never visible to readers until a manifest references
-        them).
+    def _write_data(self, df: DataFrame) -> tuple[list[str], str]:
+        """Write df under a fresh commit token as ONE parquet file per
+        sack directory; return the relative paths of the files produced
+        (never visible to readers until a manifest references them) and
+        the JSON schema of the rows they hold.
 
         ``sack`` is (re)derived from the metric column here — reading
         manifest leaf files directly does not recover partition-dir
         columns, so sack deliberately lives only in the directory
         layout and is recomputed (deterministic hash) on every write.
+        One file per sack keeps a manifest at most ``num_sacks`` files
+        per commit generation, so readers list it on the driver.
         """
         token = uuid.uuid4().hex[:12]
         out = os.path.join(self.root, "data", token)
         if "sack" in df.columns:
             df = df.drop("sack")
+        schema = json.dumps(df.schema.jsonValue())
         df = df.withColumn("sack", _sack_col(self.metric_col, self.num_sacks))
-        if one_file_per_sack:
-            df = df.repartition(self.num_sacks, "sack")
-        df.write.mode("errorifexists").partitionBy("sack").parquet(out)
+        df.repartition(self.num_sacks, "sack").write.mode(
+            "errorifexists"
+        ).partitionBy("sack").parquet(out)
         rel = []
         for dirpath, _dirs, names in os.walk(out):
             for n in names:
@@ -168,10 +185,20 @@ class SnapshotStore:
                     rel.append(
                         os.path.relpath(os.path.join(dirpath, n), self.root)
                     )
-        return sorted(rel)
+        return sorted(rel), schema
 
     def _abs(self, rel_files: Sequence[str]) -> list[str]:
         return [os.path.join(self.root, p) for p in rel_files]
+
+    def _scan(
+        self, spark: SparkSession, m: Manifest, files: Sequence[str] | None = None
+    ) -> DataFrame:
+        """Parquet scan of ``files`` (default: all of m's).  With the
+        manifest's schema no inference job runs; older manifests infer."""
+        reader = spark.read
+        if m.schema is not None:
+            reader = reader.schema(StructType.fromJson(json.loads(m.schema)))
+        return reader.parquet(*self._abs(m.files if files is None else files))
 
     @staticmethod
     def _file_sack(rel_path: str) -> int | None:
@@ -191,16 +218,16 @@ class SnapshotStore:
         m = manifest if manifest is not None else self.current()
         if m is None or not m.files:
             return None
-        return spark.read.parquet(*self._abs(m.files))
+        return self._scan(spark, m)
 
     def append(self, df: DataFrame, max_retries: int = 5) -> Manifest:
         """Append-only commit (frozen splits, immutable aggregates).
         Conflicts only race on the version number, so retry is free —
         the data files are written once and reused."""
-        files = self._write_data(df)
+        files, schema = self._write_data(df)
         for _ in range(max_retries):
             try:
-                return self._commit(self.current(), add=files)
+                return self._commit(self.current(), add=files, schema=schema)
             except StoreConflict:
                 continue
         raise StoreConflict("append: version race did not settle")
@@ -210,10 +237,12 @@ class SnapshotStore:
         batch: DataFrame,
         key_cols: Sequence[str] = ("metric_id", "granularity", "bucket_ts"),
         max_retries: int = 3,
-    ) -> Manifest:
+    ) -> Manifest | None:
         """Upsert ``batch`` by ``key_cols`` (MERGE semantics: batch row
         wins over stored row with equal keys), rewriting ONLY the data
-        files of sacks the batch touches.
+        files of sacks the batch touches.  An empty batch touches no
+        sack: it writes and commits nothing and returns the current
+        manifest (None for an empty store).
 
         Unlike merge_batch_into_rollup's overwrite, the plan reads old
         files that stay on disk until vacuum — no self-read cycle, no
@@ -221,28 +250,27 @@ class SnapshotStore:
         recomputed against the refreshed snapshot (the loser's work is
         discarded — correctness over wasted effort).
         """
+        sacks = {
+            r[0]
+            for r in batch.select(
+                _sack_col(self.metric_col, self.num_sacks).alias("sack")
+            )
+            .distinct()
+            .collect()
+        }
         for _ in range(max_retries):
             base = self.current()
+            if not sacks:
+                return base
             if base is None:
                 try:
-                    return self._commit(None, add=self._write_data(batch))
+                    files, schema = self._write_data(batch)
+                    return self._commit(None, add=files, schema=schema)
                 except StoreConflict:
                     continue
-            sacks = {
-                r[0]
-                for r in batch.select(
-                    _sack_col(self.metric_col, self.num_sacks).alias("sack")
-                )
-                .distinct()
-                .collect()
-            }
-            touched = [
-                p for p in base.files if self._file_sack(p) in sacks
-            ]
-            untouched_keep = [p for p in base.files if p not in set(touched)]
-            spark = batch.sparkSession
+            touched = [p for p in base.files if self._file_sack(p) in sacks]
             if touched:
-                existing = spark.read.parquet(*self._abs(touched))
+                existing = self._scan(batch.sparkSession, base, touched)
                 keep = existing.join(
                     batch.select(*key_cols).distinct(),
                     on=list(key_cols),
@@ -251,10 +279,10 @@ class SnapshotStore:
                 merged = keep.unionByName(batch)
             else:
                 merged = batch
-            files = self._write_data(merged)
+            files, schema = self._write_data(merged)
             _crash_point("store:pre-commit")
             try:
-                return self._commit(base, add=files, remove=touched)
+                return self._commit(base, add=files, remove=touched, schema=schema)
             except StoreConflict:
                 continue
         raise StoreConflict("merge: lost the version race repeatedly")
@@ -267,11 +295,13 @@ class SnapshotStore:
             base = self.current()
             if base is None:
                 raise ValueError("compact: empty store")
-            spark = SparkSession.getActiveSession()
-            df = spark.read.parquet(*self._abs(base.files))
-            files = self._write_data(df, one_file_per_sack=True)
+            files, schema = self._write_data(
+                self._scan(SparkSession.getActiveSession(), base)
+            )
             try:
-                return self._commit(base, add=files, remove=list(base.files))
+                return self._commit(
+                    base, add=files, remove=list(base.files), schema=schema
+                )
             except StoreConflict:
                 continue
         raise StoreConflict("compact: lost the version race repeatedly")

@@ -17,3 +17,16 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def sf_dir_mid():
     return "/root/testdata/sf0.01"
+
+
+@pytest.fixture(autouse=True)
+def _stop_leftover_streams():
+    """Stop any streaming query a test leaves running, so it does not keep
+    launching micro-batches under the tests that follow."""
+    yield
+    from pyspark.sql import SparkSession
+
+    session = SparkSession.getActiveSession()
+    if session is not None:
+        for q in session.streams.active:
+            q.stop()

@@ -126,6 +126,17 @@ def test_no_overlap_raises(spark):
     assert out.count() == 2
 
 
+def test_low_overlap_raises_at_call_time(spark):
+    # the grid is materialized inside align_series; the verdict must
+    # still fire there, before the caller runs any action of its own
+    a = _series(spark, [(_ts(2014, 1, 1, 12, m, 0), m) for m in range(4)])
+    b = _series(spark, [(_ts(2014, 1, 1, 12, m, 0), m) for m in (0, 3)])
+    with pytest.raises(UnAggregableTimeseries, match=r"\(50\.00%\)"):
+        align_series({"a/mean": a, "b/mean": b}, fill=None)
+    out = align_series({"a/mean": a, "b/mean": b}, fill=None, needed_overlap=50.0)
+    assert [r["ts"].minute for r in out.orderBy("ts").collect()] == [0, 1, 2, 3]
+
+
 def test_not_equal_with_missing_operand(spark):
     # numpy.not_equal(NaN, x) is True: '!=' must yield 1.0 when either
     # side is missing, while every other comparison yields 0.0

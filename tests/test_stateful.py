@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime
 import math
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -31,6 +32,36 @@ def dirs(tmp_path):
     }
 
 
+def _drain(q, timeout=120.0):
+    """Wait until ``q`` has committed every landed file, then stop it.
+
+    The rate operator's processing-time idle timeout makes every trigger
+    ask for one more no-data batch, so an availableNow query over it never
+    terminates on its own (and ``processAllAvailable`` never returns).
+    Every run lands rows first, so the input is committed once a batch
+    that read rows is followed by one whose source offsets did not move.
+    (A restart may first redo the stopped run's uncommitted no-data
+    batch, which is why the order matters.)"""
+    deadline = time.monotonic() + timeout
+    try:
+        while True:
+            if q.exception() is not None:
+                raise q.exception()
+            read_rows = False
+            for p in q.recentProgress:
+                if p["numInputRows"] > 0:
+                    read_rows = True
+                elif read_rows and all(
+                    s["startOffset"] == s["endOffset"] for s in p["sources"]
+                ):
+                    return
+            assert q.isActive, "query stopped before a no-data batch"
+            assert time.monotonic() < deadline, "input not drained in time"
+            time.sleep(0.2)
+    finally:
+        q.stop()
+
+
 def _run(spark, dirs):
     stream = si.read_measures_stream(spark, dirs["landing"])
     rates = stateful_rate_stream(stream)
@@ -42,7 +73,7 @@ def _run(spark, dirs):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _drain(q)
     return spark.read.parquet(dirs["table"]).collect()
 
 

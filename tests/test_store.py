@@ -120,3 +120,135 @@ def test_store_merge_sink_adapter(spark, tmp_path):
     sink(_rollups(spark, [("a", 60.0, 0, 2.0), ("b", 60.0, 0, 3.0)]), 1)
     got = {r["metric_id"]: r["value"] for r in store.read(spark).collect()}
     assert got == {"a": 2.0, "b": 3.0}
+
+
+# -- layout contract: one file per sack, schema in the manifest ----------
+
+
+def _files_by_sack(files):
+    by_sack = {}
+    for p in files:
+        by_sack.setdefault(SnapshotStore._file_sack(p), []).append(p)
+    return by_sack
+
+
+def _sacks_of(df, num_sacks):
+    return {
+        r[0]
+        for r in df.select(
+            F.pmod(F.xxhash64("metric_id"), F.lit(num_sacks)).cast("int")
+        )
+        .distinct()
+        .collect()
+    }
+
+
+def test_every_write_is_one_file_per_touched_sack(spark, tmp_path):
+    store = SnapshotStore(str(tmp_path / "t"), num_sacks=4)
+    rows = [("m%d" % i, 60.0, t, float(i)) for i in range(12) for t in (0, 60, 120)]
+    # many input partitions: without the sack repartition each would
+    # leave its own file in every sack it holds rows of
+    first = _rollups(spark, rows).repartition(6)
+    m1 = store.append(first)
+    assert {s: len(f) for s, f in _files_by_sack(m1.files).items()} == {
+        s: 1 for s in _sacks_of(first, 4)
+    }
+
+    batch = _rollups(spark, [("m1", 60.0, 180, 1.5), ("m2", 60.0, 0, 2.5)]).repartition(3)
+    m2 = store.merge(batch)
+    written = _files_by_sack(set(m2.files) - set(m1.files))
+    assert {s: len(f) for s, f in written.items()} == {s: 1 for s in _sacks_of(batch, 4)}
+
+    store.append(_rollups(spark, rows[:6]).repartition(4))
+    m4 = store.compact()
+    assert {s: len(f) for s, f in _files_by_sack(m4.files).items()} == {
+        s: 1 for s in _sacks_of(first, 4)
+    }
+    assert store.read(spark, m4).count() == len(rows) + 1 + 6
+
+
+def _job_ids(spark):
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(None))
+
+
+def test_manifest_carries_schema_and_read_runs_no_job(spark, tmp_path):
+    store = SnapshotStore(str(tmp_path / "t"), num_sacks=4)
+    df = _rollups(spark, [("m%d" % i, 60.0, i, float(i)) for i in range(8)])
+    m = store.append(df)
+    assert m.schema is not None and "sack" not in m.schema
+    assert store.current() == m  # the schema survives the manifest file
+    before = _job_ids(spark)
+    got = store.read(spark)
+    assert _job_ids(spark) == before, "read() must neither list nor infer"
+    assert got.columns == df.columns
+    assert sorted(tuple(r) for r in got.collect()) == sorted(tuple(r) for r in df.collect())
+
+
+def test_manifest_without_schema_still_reads(spark):
+    import pyarrow.parquet as pq
+
+    from gnocchi_spark import planmode
+
+    stub = SnapshotStore(os.path.join(planmode.FIXTURES, "store_stub"), num_sacks=2)
+    m = stub.current()
+    assert m.schema is None
+    want = []
+    for p in stub._abs(m.files):
+        t = pq.read_table(p, columns=["metric_id", "mean", "cnt"])
+        want.extend(zip(*(t.column(c).to_pylist() for c in t.column_names)))
+    got = stub.read(spark).select("metric_id", "mean", "cnt").collect()
+    assert sorted(tuple(r) for r in got) == sorted(want)
+    assert len(got) == 40
+
+
+def test_empty_merge_commits_nothing(spark, tmp_path):
+    store = SnapshotStore(str(tmp_path / "t"), num_sacks=4)
+    empty = _rollups(spark, [])
+    assert store.merge(empty) is None  # empty store stays empty
+    assert store.current() is None
+    m1 = store.append(_rollups(spark, [("a", 60.0, 0, 1.0)]))
+    assert store.merge(empty) == m1
+    assert store.current() == m1
+    data_files = {
+        os.path.relpath(os.path.join(d, n), store.root)
+        for d, _dirs, names in os.walk(os.path.join(store.root, "data"))
+        for n in names
+        if n.endswith(".parquet")
+    }
+    assert data_files == set(m1.files)
+
+
+def test_get_measures_sorts_a_series_spread_over_files(spark, tmp_path):
+    import datetime as dt
+
+    from gnocchi_spark.operators.read import get_measures
+
+    store = SnapshotStore(str(tmp_path / "t"), num_sacks=2)
+    t0 = dt.datetime(2024, 1, 1)
+    minutes = list(range(40))
+    # four commits of interleaved minutes, newest first, plus another
+    # metric: the series sits in several files, each its own partition
+    for k in range(4):
+        store.append(
+            spark.createDataFrame(
+                [
+                    (mid, "mean", "60", t0 + dt.timedelta(minutes=i), float(i))
+                    for i in reversed(minutes[k::4])
+                    for mid in ("m1", "m2")
+                ],
+                "metric_id string, method string, granularity string, "
+                "bucket_ts timestamp, value double",
+            ).repartition(3)
+        )
+    df = store.read(spark)
+    assert df.rdd.getNumPartitions() > 1
+    rows = get_measures(df, "m1", "mean", 60.0).collect()
+    assert [r["bucket_ts"] for r in rows] == [t0 + dt.timedelta(minutes=i) for i in minutes]
+    assert [r["value"] for r in rows] == [float(i) for i in minutes]
+    coarse = get_measures(df, "m1", "mean", 60.0, resample=300.0).collect()
+    assert [r["bucket_ts"] for r in coarse] == [
+        t0 + dt.timedelta(minutes=i) for i in range(0, 40, 5)
+    ]
+    assert [r["value"] for r in coarse] == [i + 2.0 for i in range(0, 40, 5)]

@@ -113,8 +113,8 @@ def main() -> None:
     if cpus_mode:
         report["__sides__"] = labels
     print(json.dumps(report, indent=1))
-    ht = round(sum(v["head"][0] for v in report.values() if isinstance(v, dict) and "head" in v), 2)
-    ot = round(sum(v["other"][0] for v in report.values() if isinstance(v, dict) and "other" in v), 2)
+    ht = round(sum(report[q]["head"][0] for q in queries), 2)
+    ot = round(sum(report[q]["other"][0] for q in queries), 2)
     print(json.dumps({"head_total_median_sum": ht, "other_total_median_sum": ot}))
 
 
