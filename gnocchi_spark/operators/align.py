@@ -145,9 +145,11 @@ def _enforce_overlap(
     query; here every ``partition_cols`` group is checked and ANY
     failing group raises (the API returns 400 for the whole request).
 
-    Shape: the grid is materialized once (local checkpoint), then one
-    tiny bounds aggregate (one row per group) is broadcast back onto
-    it, trim/overlap flags are plain columns, and a SINGLE validation
+    Shape: the grid is materialized once (local checkpoint).  When an
+    edge is unbounded, one tiny bounds aggregate (one row per group) is
+    broadcast back onto it; with both ``start`` and ``stop`` given
+    nothing is trimmed, so that aggregate and its join are skipped.
+    Trim/overlap flags are plain columns, and a SINGLE validation
     action computes raw + trimmed stats per group in one
     conditional-aggregation pass — no per-query scalar probes, no
     empty-partition window.
@@ -158,30 +160,34 @@ def _enforce_overlap(
     # all read this grid instead of re-running the N series scans
     base = wide.withColumn("__ov", ov).localCheckpoint(eager=True)
 
-    bound_aggs = [
-        F.min(F.when(F.col("__ov"), F.col("ts"))).alias("__first_ov"),
-        F.max(F.when(F.col("__ov"), F.col("ts"))).alias("__last_ov"),
-    ]
-    bounds = base.groupBy(*pk).agg(*bound_aggs) if pk else base.agg(*bound_aggs)
-    joined = (
-        base.join(F.broadcast(bounds), on=pk)
-        if pk
-        else base.crossJoin(F.broadcast(bounds))
-    )
+    if start is not None and stop is not None:
+        # both edges bounded: every grid row is kept, n_t is the row count
+        joined = base.withColumn("__in_trim", F.lit(True))
+    else:
+        bound_aggs = [
+            F.min(F.when(F.col("__ov"), F.col("ts"))).alias("__first_ov"),
+            F.max(F.when(F.col("__ov"), F.col("ts"))).alias("__last_ov"),
+        ]
+        bounds = base.groupBy(*pk).agg(*bound_aggs) if pk else base.agg(*bound_aggs)
+        joined = (
+            base.join(F.broadcast(bounds), on=pk)
+            if pk
+            else base.crossJoin(F.broadcast(bounds))
+        )
 
-    # unbounded edges trim to the overlap region (processor.py:206-214);
-    # a group with no overlap at all (NULL bounds) keeps every row so the
-    # needed_overlap==0 contract still returns the full grid.
-    in_trim = F.lit(True)
-    if start is None:
-        in_trim = in_trim & (
-            F.col("__first_ov").isNull() | (F.col("ts") >= F.col("__first_ov"))
-        )
-    if stop is None:
-        in_trim = in_trim & (
-            F.col("__last_ov").isNull() | (F.col("ts") <= F.col("__last_ov"))
-        )
-    joined = joined.withColumn("__in_trim", in_trim)
+        # unbounded edges trim to the overlap region (processor.py:206-214);
+        # a group with no overlap at all (NULL bounds) keeps every row so
+        # the needed_overlap==0 contract still returns the full grid.
+        in_trim = F.lit(True)
+        if start is None:
+            in_trim = in_trim & (
+                F.col("__first_ov").isNull() | (F.col("ts") >= F.col("__first_ov"))
+            )
+        if stop is None:
+            in_trim = in_trim & (
+                F.col("__last_ov").isNull() | (F.col("ts") <= F.col("__last_ov"))
+            )
+        joined = joined.withColumn("__in_trim", in_trim)
 
     stat_aggs = [
         F.count(F.when(F.col("__ov"), F.lit(1))).alias("n_ov"),

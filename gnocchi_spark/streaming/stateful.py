@@ -121,7 +121,13 @@ def stateful_rate_stream(
     (metric_id, ts, rate, n_stale); rows with a null ts carry only a
     stale-drop count.  Downstream bucketing is a plain rollup over the
     rate column.  Idle metrics evict after ``ttl_minutes`` of no
-    traffic (processing-time timeout)."""
+    traffic (processing-time timeout).
+
+    Because of that timeout, every trigger asks for one more no-data
+    micro-batch, so a ``trigger(availableNow=True)`` query over this
+    stream never terminates and ``processAllAvailable()`` never
+    returns.  Stop such a query explicitly once its input is committed
+    (``tests/test_stateful.py``'s ``_drain`` helper shows the pattern)."""
     return measures.groupBy(metric_col).applyInPandasWithState(
         _rate_fn(ttl_minutes),
         outputStructType=RATE_OUT_SCHEMA,
@@ -190,7 +196,11 @@ def streaming_dedup_stream(
     content, not traffic.  ``ttl_minutes`` turns it into a windowed
     dedup ("suppress repeats seen within the last X minutes") for
     unbounded-vocabulary streams where exact forever-dedup would grow
-    state without bound; None means exact semantics.
+    state without bound; None means exact semantics.  With
+    ``ttl_minutes`` the state uses a processing-time timeout, so, as for
+    stateful_rate_stream, a ``trigger(availableNow=True)`` query never
+    terminates and ``processAllAvailable()`` never returns: stop it
+    explicitly once its input is committed.
 
     Input must carry (doc_id, ``hash_col``); compute the hash map-side
     (md5 of the normalized text) BEFORE this operator so the only

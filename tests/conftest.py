@@ -3,6 +3,17 @@ import pytest
 from gnocchi_spark.session import get_spark
 
 
+def pytest_report_header(config):
+    """Say which test tier runs: pyproject's addopts deselect ``slow``."""
+    expr = config.getoption("markexpr")
+    if expr == "not slow":
+        return (
+            "tier: fast - the default run excludes tests marked slow; "
+            'include them with -m "slow or not slow"'
+        )
+    return f"tier: -m {expr!r}" if expr else "tier: all tests (no -m filter)"
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("gnocchi-spark-tests", shuffle_partitions=8)

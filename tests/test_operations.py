@@ -133,6 +133,15 @@ def test_low_overlap_raises_at_call_time(spark):
     b = _series(spark, [(_ts(2014, 1, 1, 12, m, 0), m) for m in (0, 3)])
     with pytest.raises(UnAggregableTimeseries, match=r"\(50\.00%\)"):
         align_series({"a/mean": a, "b/mean": b}, fill=None)
+    # only unbounded edges trim to the overlap: c overlaps a at 12:01-12:02
+    c = _series(spark, [(_ts(2014, 1, 1, 12, m, 0), m) for m in (1, 2)])
+    pair = {"a/mean": a, "c/mean": c}
+    t0, t4 = _ts(2014, 1, 1, 12, 0, 0), _ts(2014, 1, 1, 12, 4, 0)
+    assert align_series(pair, fill=None).count() == 2
+    with pytest.raises(UnAggregableTimeseries, match=r"\(66\.67%\)"):
+        align_series(pair, fill=None, start=t0)
+    with pytest.raises(UnAggregableTimeseries, match=r"\(50\.00%\)"):
+        align_series(pair, fill=None, start=t0, stop=t4)
     out = align_series({"a/mean": a, "b/mean": b}, fill=None, needed_overlap=50.0)
     assert [r["ts"].minute for r in out.orderBy("ts").collect()] == [0, 1, 2, 3]
 

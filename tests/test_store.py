@@ -8,7 +8,12 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from gnocchi_spark.operators.store import SnapshotStore, StoreConflict, store_merge_sink
+from gnocchi_spark.operators.store import (
+    SnapshotFrame,
+    SnapshotStore,
+    StoreConflict,
+    store_merge_sink,
+)
 
 
 def _rollups(spark, rows):
@@ -220,7 +225,8 @@ def test_empty_merge_commits_nothing(spark, tmp_path):
     assert data_files == set(m1.files)
 
 
-def test_get_measures_sorts_a_series_spread_over_files(spark, tmp_path):
+@pytest.mark.parametrize("pinned", [True, False], ids=["pinned", "unpinned"])
+def test_get_measures_sorts_a_series_spread_over_files(spark, tmp_path, pinned):
     import datetime as dt
 
     from gnocchi_spark.operators.read import get_measures
@@ -244,6 +250,9 @@ def test_get_measures_sorts_a_series_spread_over_files(spark, tmp_path):
         )
     df = store.read(spark)
     assert df.rdd.getNumPartitions() > 1
+    if not pinned:  # a transformed frame drops the pin: the Spark plan
+        df = df.select("*")
+    assert isinstance(df, SnapshotFrame) == pinned
     rows = get_measures(df, "m1", "mean", 60.0).collect()
     assert [r["bucket_ts"] for r in rows] == [t0 + dt.timedelta(minutes=i) for i in minutes]
     assert [r["value"] for r in rows] == [float(i) for i in minutes]
@@ -252,3 +261,122 @@ def test_get_measures_sorts_a_series_spread_over_files(spark, tmp_path):
         t0 + dt.timedelta(minutes=i) for i in range(0, 40, 5)
     ]
     assert [r["value"] for r in coarse] == [i + 2.0 for i in range(0, 40, 5)]
+
+
+_SERIES_DDL = (
+    "metric_id string, method string, granularity string, "
+    "bucket_ts timestamp, value double"
+)
+_LOCAL_METHODS = (
+    "mean", "sum", "last", "max", "min", "std", "median", "first", "count",
+    "90pct", "rate:mean",
+)
+
+
+@pytest.fixture(scope="module")
+def series_store(spark, tmp_path_factory):
+    """Two metrics x every method at 60 s over two commits, with gaps."""
+    import datetime as dt
+    import random
+
+    rng = random.Random(7)
+    store = SnapshotStore(str(tmp_path_factory.mktemp("series")), num_sacks=2)
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [
+        (mid, method, "60", t0 + dt.timedelta(minutes=i), round(rng.uniform(-50, 50), 3))
+        for mid in ("m1", "m2")
+        for method in _LOCAL_METHODS
+        for i in range(40)
+        if rng.random() < 0.8
+    ]
+    rng.shuffle(rows)
+    half = len(rows) // 2
+    for part in (rows[:half], rows[half:]):
+        store.append(spark.createDataFrame(part, _SERIES_DDL).repartition(2))
+    return store
+
+
+def _same_rows(got, want):
+    import math
+
+    assert [(r["bucket_ts"], r["granularity"]) for r in got] == [
+        (r["bucket_ts"], r["granularity"]) for r in want
+    ]
+    for g, w in zip(got, want):
+        assert (g["value"] is None) == (w["value"] is None)
+        if w["value"] is not None:  # resample sums partials in scan order
+            assert math.isclose(g["value"], w["value"], rel_tol=1e-9, abs_tol=1e-12)
+
+
+def _reads_local_relation(df):
+    return "LocalRelation" in df._jdf.queryExecution().analyzed().toString()
+
+
+def test_local_tier_matches_spark_plan(spark, series_store):
+    import datetime as dt
+
+    from gnocchi_spark.operators.read import get_measures
+
+    pinned = series_store.read(spark)
+    plain = pinned.select("*")
+    utc = dt.timezone.utc
+    windows = [
+        (None, None),
+        ("2024-01-01T00:07:30", None),  # unaligned start: floored
+        (None, "2024-01-01 00:20:00"),  # stop on a bucket: excluded
+        ("2024-01-01T00:03:20.5Z", "2024-01-01T00:31:00Z"),
+        (dt.datetime(2024, 1, 1, 0, 12, 10, tzinfo=utc), dt.datetime(2024, 1, 1, 0, 25, tzinfo=utc)),
+        ("2024-01-01", "2024-01-01T00:33:00"),
+        (dt.datetime(2024, 1, 1, 0, 4), dt.datetime(2024, 1, 1, 0, 29)),  # naive: Spark plan
+    ]
+    cases = [
+        (mid, method, windows[i % len(windows)], (None, 300.0)[i % 2])
+        for i, (mid, method) in enumerate(
+            [("m1", m) for m in _LOCAL_METHODS] + [("m2", "mean"), ("m2", "std")]
+        )
+    ]
+    cases += [
+        ("m1", "mean", ("2024-01-01T00:10:00", "2024-01-01T00:10:00"), None),  # empty
+        ("m1", "max", ("2024-01-01T00:10:00", "2024-01-01T00:10:00"), 300.0),
+        ("absent", "mean", (None, None), None),
+        ("absent", "sum", ("2024-01-01T00:07:30", None), 300.0),
+    ]
+    nonempty = 0
+    for mid, method, (start, stop), resample in cases:
+        local = get_measures(pinned, mid, method, 60.0, start, stop, resample)
+        naive = isinstance(start, dt.datetime) and start.tzinfo is None
+        assert _reads_local_relation(local) != naive, (start, stop)
+        want = get_measures(plain, mid, method, 60.0, start, stop, resample).collect()
+        _same_rows(local.collect(), want)
+        nonempty += bool(want)
+    assert nonempty == len(cases) - 4
+
+
+def test_local_tier_runs_no_job_without_resample(spark, series_store):
+    from gnocchi_spark.operators.read import get_measures
+
+    df = series_store.read(spark)
+    before = _job_ids(spark)
+    rows = get_measures(df, "m1", "mean", 60.0, "2024-01-01T00:05:00", "2024-01-01T00:30:00").collect()
+    assert _job_ids(spark) == before, "a small pinned read must not submit a Spark job"
+    assert rows and [r["bucket_ts"] for r in rows] == sorted(r["bucket_ts"] for r in rows)
+
+
+def test_stub_and_over_cap_stores_keep_the_spark_plan(spark, series_store, monkeypatch):
+    from gnocchi_spark import planmode
+    from gnocchi_spark.operators import store as store_mod
+    from gnocchi_spark.operators.read import _local_series, get_measures
+
+    stub = SnapshotStore(os.path.join(planmode.FIXTURES, "store_stub"), num_sacks=2)
+    assert stub.read_local(stub.current(), ["metric_id"], [("metric_id", "==", "x")]) is None
+    assert _local_series(stub.read(spark), "x", "mean", 60.0, None, None, None) is None
+
+    df = series_store.read(spark)
+    assert _local_series(df, "m1", "mean", "D", None, None, None) is None  # calendar
+    want = get_measures(df, "m1", "sum", 60.0, "2024-01-01T00:05:00").collect()
+    monkeypatch.setattr(store_mod, "LOCAL_READ_MAX_BYTES", 0)
+    assert _local_series(df, "m1", "sum", 60.0, "2024-01-01T00:05:00", None, None) is None
+    before = _job_ids(spark)
+    got = get_measures(df, "m1", "sum", 60.0, "2024-01-01T00:05:00").collect()
+    assert _job_ids(spark) != before, "an over-cap store must be read by Spark"
+    _same_rows(got, want)
