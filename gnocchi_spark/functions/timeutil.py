@@ -10,6 +10,9 @@ granularities Y/H/Q/M/W (gnocchi/calendar.py:95-100) map to
 
 from __future__ import annotations
 
+import datetime
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -17,6 +20,14 @@ CALENDAR_GRANULARITIES = {"Y", "H", "Q", "M", "W", "D"}
 
 # gnocchi/calendar.py:95-100 — Y=year, H=half, Q=quarter, M=month, W=week.
 _DATE_TRUNC = {"Y": "year", "Q": "quarter", "M": "month", "D": "day"}
+
+# the ISO forms whose cast to timestamp window_us reproduces; a trailing
+# Z pins UTC, without it the session time zone must be UTC
+_ISO = re.compile(
+    r"(\d{4})-(\d{2})-(\d{2})(?:[T ](\d{2}):(\d{2}):(\d{2})(?:\.(\d{1,6}))?(Z)?)?"
+)
+_EPOCH = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+_US = datetime.timedelta(microseconds=1)
 
 
 def truncate_to_bucket(ts: Column, granularity: float | str) -> Column:
@@ -37,6 +48,63 @@ def truncate_to_bucket(ts: Column, granularity: float | str) -> Column:
         raise ValueError(f"granularity must be positive, got {granularity!r}")
     us = F.unix_micros(ts)
     return F.timestamp_micros((us - us % F.lit(gran_us)).cast("long"))
+
+
+def window_us(spark, start, stop, granularity=None) -> tuple[int | None, int | None] | None:
+    """The window ``[start, stop)`` in epoch microseconds, exactly as the
+    Spark plans compute it: each bound as ``F.lit(v).cast("timestamp")``
+    reads it, and ``start`` floored to ``granularity`` (when given) as
+    truncate_to_bucket does.  Returns ``(lo, hi)``, with None for an
+    unset bound, or None when a bound is not reproduced here; the caller
+    then keeps its Spark plan.
+
+    Reproduced bounds: an ISO string (``YYYY-MM-DD``, optionally with
+    ``[T ]HH:MM:SS``, up to six fractional digits and a trailing ``Z``;
+    without ``Z`` the session time zone must be UTC) or a time-zone-aware
+    datetime from 1900 on.  A naive datetime's cast depends on the
+    process time zone, and a calendar granularity has no fixed width."""
+    lo = hi = None
+    if start is not None:
+        lo = _bound_us(spark, start)
+        if lo is None:
+            return None
+        if granularity is not None:
+            seconds = granularity_seconds(granularity)
+            step = 0 if seconds is None else int(round(seconds * 1_000_000))
+            if step <= 0:
+                return None
+            # Spark's floor: us - us % step, with a remainder that takes the
+            # sign of us (so pre-1970 bounds round toward zero, as there)
+            rem = abs(lo) % step
+            lo -= rem if lo >= 0 else -rem
+    if stop is not None:
+        hi = _bound_us(spark, stop)
+        if hi is None:
+            return None
+    return lo, hi
+
+
+def _bound_us(spark, v) -> int | None:
+    """``v`` as epoch microseconds exactly as ``F.lit(v).cast("timestamp")``
+    reads it, or None for a bound whose cast is not reproduced here."""
+    if isinstance(v, datetime.datetime):
+        # PySpark sends an aware datetime as its UTC instant
+        if v.tzinfo is None or v.utcoffset() is None or v.year < 1900:
+            return None
+        return (v - _EPOCH) // _US
+    if not isinstance(v, str):
+        return None
+    m = _ISO.fullmatch(v)
+    if m is None:
+        return None
+    if not m.group(8) and spark.conf.get("spark.sql.session.timeZone") not in ("UTC", "Etc/UTC"):
+        return None
+    y, mo, d, h, mi, s = (int(g or 0) for g in m.groups()[:6])
+    try:
+        ts = datetime.datetime(y, mo, d, h, mi, s, tzinfo=datetime.timezone.utc)
+    except ValueError:  # Spark casts an impossible date to NULL
+        return None
+    return (ts - _EPOCH) // _US + int((m.group(7) or "").ljust(6, "0"))
 
 
 _REL_UNITS = {

@@ -14,14 +14,23 @@ NaN analogue in the reference grid).
 Scale note: ``partition_cols`` threads a grouping key through every
 window so a grouped query (aggregates API groupby=) keeps one parallel
 partition per group instead of a single global sort.
+
+Small grids: when every series is already a local relation (a small
+pinned read served by get_measures' driver tier), the fill=None grid is
+built on the driver instead, the way the reference builds it inside one
+API process (see align_series).
 """
 
 from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
+from decimal import ROUND_HALF_UP, Context, Decimal
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType, TimestampType
+
+from gnocchi_spark.functions.timeutil import window_us
 
 
 class UnAggregableTimeseries(Exception):
@@ -76,8 +85,38 @@ def align_series(
     inclusive; ``stop`` is EXCLUSIVE (numpy half-open slice).  r12, both
     pinned by the align/fill differential fuzz — ``stop`` was
     previously compared inclusively.
+
+    Driver tier: with ``fill=None`` (the aggregates API default) and no
+    ``partition_cols``, when every series projected to
+    ``unix_micros(ts)`` and ``value`` cast to double optimizes to a
+    LocalRelation (as get_measures' driver tier returns for a small
+    pinned store), the grid is built on the driver: each series is
+    collected (no Spark job), the window is applied in epoch
+    microseconds by timeutil.window_us (the floor and cast the Spark
+    plan uses), the first value per (ts, series) wins as ``F.first``
+    does, and the overlap check and unbounded-edge trim are those of
+    _enforce_overlap.  The result is an Arrow-built local relation
+    ``(ts, <label>...)`` sorted by ``ts``, and nothing is checkpointed.
+    The error message is byte for byte the Spark plan's: its numbers are
+    formatted like Java's Formatter (Spark's ``format_string``), i.e. the
+    shortest decimal form rounded half-up, so 12.125 prints as ``12.13``
+    where Python's ``%.2f`` gives ``12.12``.
+
+    Every other input keeps the Spark plan: grouped grids, other fills,
+    frames read from files, a mix of local and non-local series, a
+    non-timestamp ``ts`` column, a NULL ``ts``, a bound window_us does
+    not reproduce (such as a naive datetime), a calendar
+    ``granularity_s`` with ``start`` set, and a ``needed_overlap`` that
+    is not finite or whose magnitude reaches 1e15 (Java prints such
+    numbers with more digits than their shortest form).
     """
     labels = list(series)
+    if fill is None and not partition_cols:
+        local = _local_aligned(
+            series, needed_overlap, start, stop, ts_col, value_col, granularity_s
+        )
+        if local is not None:
+            return local
     long = stack_series(series, ts_col, value_col, partition_cols)
     if start is not None:
         s = F.lit(start).cast("timestamp")
@@ -106,6 +145,91 @@ def align_series(
             wide = _directional_fill(wide, labels, direction, partition_cols)
         return wide
     raise ValueError(f"invalid fill {fill!r}")
+
+
+def _local_aligned(series, needed_overlap, start, stop, ts_col, value_col, granularity_s):
+    """The fill=None grid built on the driver, or None when align_series
+    must keep the Spark plan (see its docstring for the rules)."""
+    frames = list(series.values())
+    if (
+        not frames
+        # from ~1e16 up Java prints more digits than the shortest form
+        or not abs(needed_overlap) < 1e15
+        or any(dict(df.dtypes).get(ts_col) != "timestamp" for df in frames)
+    ):
+        return None
+    spark = frames[0].sparkSession
+    window = window_us(spark, start, stop, granularity_s or None)
+    if window is None:
+        return None
+    projected = []
+    for df in frames:  # stop at the first series that is not local
+        p = df.select(
+            F.unix_micros(F.col(ts_col)).alias("us"),
+            F.col(value_col).cast("double").alias("value"),
+        )
+        if p._jdf.queryExecution().optimizedPlan().getClass().getSimpleName() != "LocalRelation":
+            return None
+        projected.append(p)
+    lo, hi = window
+    cols = []  # per series: us -> the first value seen at that us
+    for p in projected:
+        first = {}
+        for us, v in p.collect():
+            if us is None:  # a NULL ts is its own grid row there
+                return None
+            if (lo is None or us >= lo) and (hi is None or us < hi):
+                first.setdefault(us, v)
+        cols.append(first)
+    times = sorted(set().union(*cols))
+
+    # _enforce_overlap, ungrouped: unbounded edges trim to the overlap
+    # region, a grid with no overlap keeps every row
+    ov = [all(c.get(t) is not None for c in cols) for t in times]
+    ov_times = [t for t, o in zip(times, ov) if o]
+    keep = [
+        not ov_times
+        or ((start is not None or t >= ov_times[0]) and (stop is not None or t <= ov_times[-1]))
+        for t in times
+    ]
+    n_ov, n_t = len(ov_times), sum(keep)
+    n_ov_t = sum(k and o for k, o in zip(keep, ov))
+    if n_ov == 0 and needed_overlap > 0:
+        raise UnAggregableTimeseries("No overlap")
+    if n_ov > 0 and n_t > 0:
+        pct = n_ov_t * 100.0 / n_t
+        if pct < float(needed_overlap):
+            raise UnAggregableTimeseries(
+                f"Less than {_java_fixed(needed_overlap, 6)}% of datapoints overlap"
+                f" in this timespan ({_java_fixed(pct, 2)}%)"
+            )
+
+    import pyarrow as pa
+
+    times = [t for t, k in zip(times, keep) if k]
+    labels = list(series)
+    table = pa.Table.from_arrays(
+        [
+            pa.array(times, pa.timestamp("us", tz="UTC")),
+            *[pa.array([c.get(t) for t in times], pa.float64()) for c in cols],
+        ],
+        names=["ts", *labels],
+    )
+    schema = StructType(
+        [StructField("ts", TimestampType()), *[StructField(c, DoubleType()) for c in labels]]
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def _java_fixed(x: float, places: int) -> str:
+    """``x`` as Spark's format_string prints ``%.<places>f`` (Java's
+    Formatter): the shortest decimal form of x rounded half-up, where
+    Python's ``%`` rounds the binary value (12.125: ``12.13``, not
+    ``12.12``)."""
+    d = Decimal(repr(float(x))).quantize(
+        Decimal(1).scaleb(-places), ROUND_HALF_UP, Context(prec=1000)
+    )
+    return f"{d:f}"
 
 
 def _directional_fill(

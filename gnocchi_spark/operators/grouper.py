@@ -57,9 +57,9 @@ def prepare_revisions(
         .when(stop_lit.isNull(), F.col(rev_end_col))
         .otherwise(F.least(F.col(rev_end_col), stop_lit))
     )
-    return revisions.withColumn("search_start", search_start).withColumn(
-        "search_end", search_end
-    )
+    # one projection: each DataFrame transformation is a driver-side
+    # analysis pass
+    return revisions.withColumns({"search_start": search_start, "search_end": search_end})
 
 
 def history_grouped_aggregate(
@@ -118,10 +118,9 @@ def history_grouped_aggregate(
     )
     coefficient = (expected_end - expected_beg).cast("double") / F.lit(float(g_us))
 
-    weighted = joined.withColumn("__w", F.col("b.value") * coefficient)
     return (
-        weighted.groupBy(*[F.col(f"r.{a}").alias(a) for a in group_attrs], F.col("b.bucket_ts").alias("bucket_ts"))
-        .agg(F.sum("__w").alias("value"))
+        joined.groupBy(*[F.col(f"r.{a}").alias(a) for a in group_attrs], F.col("b.bucket_ts").alias("bucket_ts"))
+        .agg(F.sum(F.col("b.value") * coefficient).alias("value"))
         .select(
             *group_attrs,
             "bucket_ts",

@@ -14,9 +14,6 @@ reference serves a read inside one API process.
 
 from __future__ import annotations
 
-import datetime
-import re
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructType, TimestampType
@@ -26,6 +23,7 @@ from gnocchi_spark.functions.timeutil import (
     granularity_label,
     granularity_seconds,
     truncate_to_bucket,
+    window_us,
 )
 from gnocchi_spark.operators.store import SnapshotFrame
 from gnocchi_spark.policy import parse_method
@@ -38,14 +36,8 @@ _LOCAL_KEY_TYPES = {
     "granularity": StringType(),
     "bucket_ts": TimestampType(),
 }
-_LOCAL_COLUMNS = ("metric_id", "bucket_ts", "granularity", "value")
-# the ISO forms whose cast to timestamp is reproduced below; a trailing
-# Z pins UTC, without it the session time zone must be UTC
-_ISO = re.compile(
-    r"(\d{4})-(\d{2})-(\d{2})(?:[T ](\d{2}):(\d{2}):(\d{2})(?:\.(\d{1,6}))?(Z)?)?"
-)
-_EPOCH = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
-_US = datetime.timedelta(microseconds=1)
+# the columns get_measures returns; resample_rollup also needs metric_id
+_SERIES_COLUMNS = ("bucket_ts", "granularity", "value")
 
 
 def get_measures(
@@ -80,21 +72,22 @@ def get_measures(
     The equality filters, the floored start and the exclusive stop are
     applied in the Arrow scan, the rows are sorted by ``bucket_ts``
     there, and Spark receives a local relation; without ``resample``
-    that result is already in ``bucket_ts`` order and collects with no
-    Spark job.  With ``resample`` the same resample_rollup runs over the
-    local relation.  The tier is taken only when all of these hold:
+    that result holds just the three returned columns, is already in
+    ``bucket_ts`` order and collects with no Spark job.  With
+    ``resample`` the same resample_rollup runs over the local relation.
+    The tier is taken only when all of these hold:
 
     - the manifest records its schema, with string ``metric_id``,
       ``method`` and ``granularity`` and a timestamp ``bucket_ts``;
     - the pinned files total at most store.LOCAL_READ_MAX_BYTES;
     - ``granularity`` and ``resample`` are numeric (not calendar);
-    - ``metric_id`` and ``method`` are strings, and each bound is None,
-      an ISO string (``YYYY-MM-DD``, optionally with ``[T ]HH:MM:SS``,
-      up to six fractional digits and a trailing ``Z``; without ``Z``
-      the session time zone must be UTC) or a time-zone-aware datetime
-      from 1900 on.  Those are the bounds whose Spark cast it
-      reproduces exactly; a naive datetime's cast depends on the
-      process time zone.
+    - ``metric_id`` and ``method`` are strings, and each bound is one
+      whose Spark cast timeutil.window_us reproduces exactly: None, an
+      ISO string (``YYYY-MM-DD``, optionally with ``[T ]HH:MM:SS``, up
+      to six fractional digits and a trailing ``Z``; without ``Z`` the
+      session time zone must be UTC) or a time-zone-aware datetime from
+      1900 on.  A naive datetime's cast depends on the process time
+      zone.
 
     Every other input (an unpinned or transformed frame, a calendar
     granularity, an over-cap store, a manifest without a schema) keeps
@@ -114,41 +107,19 @@ def get_measures(
             )
         if stop is not None:
             df = df.where(F.col("bucket_ts") < F.lit(stop).cast("timestamp"))
-    elif resample is None:  # filtered and sorted in the Arrow scan
-        return df.select("bucket_ts", "granularity", "value")
+    elif resample is None:  # filtered, projected and sorted in Arrow
+        return df
     if resample is not None:
         df = resample_rollup(df, method, resample)
     df = df.select("bucket_ts", "granularity", "value")
     return df.repartition(1).sortWithinPartitions("bucket_ts")
 
 
-def _bound_us(spark, v) -> int | None:
-    """``v`` as epoch microseconds exactly as ``F.lit(v).cast("timestamp")``
-    reads it, or None for a bound whose cast is not reproduced here."""
-    if isinstance(v, datetime.datetime):
-        # PySpark sends an aware datetime as its UTC instant
-        if v.tzinfo is None or v.utcoffset() is None or v.year < 1900:
-            return None
-        return (v - _EPOCH) // _US
-    if not isinstance(v, str):
-        return None
-    m = _ISO.fullmatch(v)
-    if m is None:
-        return None
-    if not m.group(8) and spark.conf.get("spark.sql.session.timeZone") not in ("UTC", "Etc/UTC"):
-        return None
-    y, mo, d, h, mi, s = (int(g or 0) for g in m.groups()[:6])
-    try:
-        ts = datetime.datetime(y, mo, d, h, mi, s, tzinfo=datetime.timezone.utc)
-    except ValueError:  # Spark casts an impossible date to NULL
-        return None
-    return (ts - _EPOCH) // _US + int((m.group(7) or "").ljust(6, "0"))
-
-
 def _local_series(rollups, metric_id, method, granularity, start, stop, resample):
     """The filtered, ``bucket_ts``-sorted series as a local relation with
-    columns _LOCAL_COLUMNS, or None when get_measures must keep the
-    Spark plan (see its docstring for the rules)."""
+    columns _SERIES_COLUMNS (plus a leading ``metric_id`` for
+    resample_rollup when ``resample`` is set), or None when get_measures
+    must keep the Spark plan (see its docstring for the rules)."""
     if not (
         isinstance(rollups, SnapshotFrame)
         and isinstance(metric_id, str)
@@ -163,34 +134,31 @@ def _local_series(rollups, metric_id, method, granularity, start, stop, resample
     types = {f.name: f.dataType for f in schema.fields}
     if "value" not in types or any(types.get(c) != t for c, t in _LOCAL_KEY_TYPES.items()):
         return None
+    spark = rollups.sparkSession
+    window = window_us(spark, start, stop, resample or granularity)
+    if window is None:
+        return None
     import pyarrow as pa
 
-    spark = rollups.sparkSession
     ts_type = pa.timestamp("us", tz="UTC")
     filters = [
         ("metric_id", "==", metric_id),
         ("method", "==", method),
         ("granularity", "==", granularity_label(granularity)),
     ]
-    if start is not None:
-        lo = _bound_us(spark, start)
-        step = int(round(float(resample or granularity) * 1_000_000))
-        if lo is None or step <= 0:
-            return None
-        # Spark's floor: us - us % step, with a remainder that takes the
-        # sign of us (so pre-1970 bounds round toward zero, as there)
-        rem = abs(lo) % step
-        filters.append(("bucket_ts", ">=", pa.scalar(lo - (rem if lo >= 0 else -rem), ts_type)))
-    if stop is not None:
-        hi = _bound_us(spark, stop)
-        if hi is None:
-            return None
+    lo, hi = window
+    if lo is not None:
+        filters.append(("bucket_ts", ">=", pa.scalar(lo, ts_type)))
+    if hi is not None:
         filters.append(("bucket_ts", "<", pa.scalar(hi, ts_type)))
-    table = rollups.store.read_local(rollups.manifest, _LOCAL_COLUMNS, filters)
+    # without resample no select runs over the result: each DataFrame
+    # transformation costs a driver-side analysis
+    columns = _SERIES_COLUMNS if resample is None else ("metric_id", *_SERIES_COLUMNS)
+    table = rollups.store.read_local(rollups.manifest, columns, filters)
     if table is None:
         return None
     return spark.createDataFrame(
-        table.sort_by("bucket_ts"), StructType([schema[c] for c in _LOCAL_COLUMNS])
+        table.sort_by("bucket_ts"), StructType([schema[c] for c in columns])
     )
 
 

@@ -12,8 +12,10 @@ gates):
    (constant / null / dropna / ffill / bfill / full_ffill /
    full_bfill / None), needed_overlap percentages including 0 and 100,
    and start/stop bounds that are unset, on-grid, off-grid, or
-   inverted.  Oracle: the value grid and directional fills are
-   computed by DuckDB (IGNORE NULLS windows; ``full_*`` =
+   inverted.  Each case runs over Python-row frames (the Spark plan)
+   and over Arrow-built local relations (the driver tier when fill is
+   None), and both tiers must raise the same message.  Oracle: the
+   value grid and directional fills are computed by DuckDB (IGNORE NULLS windows; ``full_*`` =
    coalesce of the two directional fills, the exact composition of
    utils.forward_fill/backward_fill); the fill=None
    needed-percent-of-overlap enforcement and unbounded-edge trim are a
@@ -46,6 +48,7 @@ import datetime
 import math
 
 import duckdb
+import pyarrow as pa
 import pytest
 # Extended fuzz/property-hunt tier (r13): excluded from the default
 # fast run so the driver verify gate finishes; the full-tier gate
@@ -189,10 +192,25 @@ def test_align_fill_overlap_matches_reference(spark, con, case):
     series, fill, needed, start, stop = case
     labels = sorted(series)
 
+    # each case runs twice: over Python-row frames (an RDD scan, so the
+    # Spark plan) and over Arrow-built local relations, which take the
+    # driver tier when fill is None; that call gets the same bounds as
+    # aware UTC datetimes, whose cast the tier reproduces
     frames = {
         lab: spark.createDataFrame(pts, "ts timestamp, value double")
         for lab, pts in series.items()
     }
+    local_frames = {
+        lab: spark.createDataFrame(
+            pa.table({
+                "ts": pa.array([t for t, _ in pts], pa.timestamp("us", tz="UTC")),
+                "value": pa.array([v for _, v in pts], pa.float64()),
+            })
+        )
+        for lab, pts in series.items()
+    }
+    utc = datetime.timezone.utc
+    aware = [b if b is None else b.replace(tzinfo=utc) for b in (start, stop)]
 
     # reference slice: start floored to the granularity, stop exclusive
     start_eff = None
@@ -216,25 +234,32 @@ def test_align_fill_overlap_matches_reference(spark, con, case):
         (times[i], *[g[i] for g in grids]) for i in keep
     ] if want_exc is None else None
 
-    got_exc = None
-    got = None
-    try:
-        out = align_series(
-            frames, fill=fill, needed_overlap=needed, start=start, stop=stop,
-            granularity_s=G_S,
-        )
-        got = [tuple(r) for r in out.select("ts", *labels).orderBy("ts").collect()]
-    except UnAggregableTimeseries as e:
-        got_exc = str(e)
+    messages = []
+    for tier, inputs, (lo, hi) in (
+        ("spark plan", frames, (start, stop)),
+        ("local relations", local_frames, aware),
+    ):
+        got_exc = None
+        got = None
+        try:
+            out = align_series(
+                inputs, fill=fill, needed_overlap=needed, start=lo, stop=hi,
+                granularity_s=G_S,
+            )
+            got = [tuple(r) for r in out.select("ts", *labels).orderBy("ts").collect()]
+        except UnAggregableTimeseries as e:
+            got_exc = str(e)
+        messages.append(got_exc)
 
-    ctx = f"fill={fill!r} needed={needed} start={start} stop={stop}\nseries={series}"
-    if want_exc is not None:
-        assert got_exc is not None, f"oracle raised ({want_exc}), spark returned {got}\n{ctx}"
-        kind = "No overlap" if "No overlap" in want_exc else "Less than"
-        assert kind in got_exc, f"exception kind mismatch: {got_exc!r} vs {want_exc!r}\n{ctx}"
-    else:
-        assert got_exc is None, f"spark raised ({got_exc}), oracle returned\n{ctx}"
-        assert got == want, f"spark={got}\noracle={want}\n{ctx}"
+        ctx = f"{tier}: fill={fill!r} needed={needed} start={start} stop={stop}\nseries={series}"
+        if want_exc is not None:
+            assert got_exc is not None, f"oracle raised ({want_exc}), spark returned {got}\n{ctx}"
+            kind = "No overlap" if "No overlap" in want_exc else "Less than"
+            assert kind in got_exc, f"exception kind mismatch: {got_exc!r} vs {want_exc!r}\n{ctx}"
+        else:
+            assert got_exc is None, f"spark raised ({got_exc}), oracle returned\n{ctx}"
+            assert got == want, f"spark={got}\noracle={want}\n{ctx}"
+    assert messages[0] == messages[1], messages
 
 
 # =============================================================================

@@ -444,3 +444,151 @@ def test_full_ffill_and_bfill(spark):
     rows2 = {r["ts"].minute: (r["a/mean"], r["b/mean"]) for r in wide2.collect()}
     assert rows2[0] == (10.0, 1.0)
     assert rows2[3] == (30.0, 2.0)
+
+
+# -- align_series' driver tier ------------------------------------------------
+
+_UTC = dt.timezone.utc
+_T0 = dt.datetime(2024, 3, 1, tzinfo=_UTC)
+_NAN = float("nan")
+
+
+def _minute(m):
+    return _T0 + dt.timedelta(minutes=m)
+
+
+# a: minutes 0-9, a duplicate ts at 3 (the first value wins, as F.first);
+# b: minutes 3-11, NULL at 5, NaN at 6 (present), NULL then 10.0 at 10;
+# c: empty.  a and b overlap at 3, 4, 6, 7, 8 and 9.
+_DIFF_SERIES = {
+    "a": [(_minute(m), float(m)) for m in range(10)] + [(_minute(3), 99.0)],
+    "b": [(_minute(m), None if m in (5, 10) else _NAN if m == 6 else m + 0.5) for m in range(3, 12)]
+    + [(_minute(10), 10.0)],
+    "c": [],
+}
+_ON = ("2024-03-01T00:02:00Z", "2024-03-01T00:08:00Z")  # on the grid
+_OFF = ("2024-03-01 00:02:30", dt.datetime(2024, 3, 1, 0, 7, 30, tzinfo=_UTC))
+_INVERTED = ("2024-03-01T00:08:00Z", "2024-03-01T00:02:00Z")
+# (start, stop, needed_overlap) -> rows kept, or the message raised
+_DIFF_CASES = [
+    (None, None, 50.0, range(3, 10)),  # both edges trimmed to the overlap
+    (None, None, 100.0, "Less than 100.000000% of datapoints overlap in this timespan (85.71%)"),
+    (*_ON, 100.0, "Less than 100.000000% of datapoints overlap in this timespan (66.67%)"),
+    (*_OFF, 50.0, range(2, 8)),  # start floored to 00:02, stop exclusive
+    (_minute(1), None, 0.0, range(1, 10)),
+    (None, "2024-03-01T00:09:00Z", 100.0,
+     "Less than 100.000000% of datapoints overlap in this timespan (83.33%)"),
+    (*_INVERTED, 0.0, range(0)),
+    (*_INVERTED, 50.0, "No overlap"),
+]
+
+
+def _arrow_frame(spark, pts):
+    """A local relation, as get_measures' driver tier returns."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "ts": pa.array([t for t, _ in pts], pa.timestamp("us", tz="UTC")),
+                "value": pa.array([v for _, v in pts], pa.float64()),
+            }
+        )
+    )
+
+
+def _row_frame(spark, pts):
+    """The same rows from Python objects: an RDD scan, so the Spark plan.
+    One partition keeps F.first's pick deterministic for duplicates;
+    the cache spares each plan the Python workers."""
+    return spark.createDataFrame(pts, "ts timestamp, value double").coalesce(1).cache()
+
+
+@pytest.fixture(scope="module")
+def tier_frames(spark):
+    local = {k: _arrow_frame(spark, v) for k, v in _DIFF_SERIES.items()}
+    plain = {k: _row_frame(spark, v) for k, v in _DIFF_SERIES.items()}
+    yield local, plain
+    for df in plain.values():
+        df.unpersist()
+
+
+def _job_ids(spark):
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(None))
+
+
+def _aligned_rows(series, **kw):
+    """Sorted result rows (NaN made comparable) or the error message."""
+    try:
+        out = align_series(series, fill=None, granularity_s=60.0, **kw)
+    except UnAggregableTimeseries as e:
+        return str(e)
+    rows = out.select("ts", *series).collect()
+    return sorted(tuple("nan" if v != v else v for v in r) for r in rows)
+
+
+def _both_tiers(spark, tier_frames, labels, **kw):
+    local, plain = tier_frames
+    before = _job_ids(spark)
+    got = _aligned_rows({k: local[k] for k in labels}, **kw)
+    assert _job_ids(spark) == before, f"the driver tier submitted a Spark job: {kw}"
+    want = _aligned_rows({k: plain[k] for k in labels}, **kw)
+    assert got == want, kw
+    return got
+
+
+def test_driver_tier_matches_spark_plan(spark, tier_frames):
+    got = {}
+    for start, stop, needed, want in _DIFF_CASES:
+        got[start, stop, needed] = _both_tiers(
+            spark, tier_frames, "ab", needed_overlap=needed, start=start, stop=stop
+        )
+        if isinstance(want, str):
+            assert got[start, stop, needed] == want, (start, stop, needed)
+        else:
+            assert [r[0].minute for r in got[start, stop, needed]] == list(want), (start, stop)
+    grid = got[None, None, 50.0]
+    assert grid[0][1:] == (3.0, 3.5)  # the first of a's two values at 3
+    assert grid[2][2] is None and grid[3][2] == "nan"
+    # an empty series leaves no overlap; needed 0 still returns the grid
+    assert _both_tiers(spark, tier_frames, "abc", needed_overlap=50.0) == "No overlap"
+    grid = _both_tiers(
+        spark, tier_frames, "abc", needed_overlap=0.0, start=_minute(0), stop=_minute(12)
+    )
+    assert len(grid) == 12 and grid[10][2] is None  # b's NULL came first at 10
+
+
+def test_driver_tier_rounds_the_message_half_up(spark):
+    # 97 of 800 timestamps overlap: 12.125%, which Spark's format_string
+    # prints as 12.13 and Python's '%.2f' as 12.12
+    x = [(_minute(m), 1.0) for m in range(449)]
+    y = [(_minute(m), 2.0) for m in range(352, 800)]
+    for build in (_arrow_frame, _row_frame):
+        pair = {"x": build(spark, x), "y": build(spark, y)}
+        with pytest.raises(UnAggregableTimeseries) as e:
+            align_series(pair, fill=None, start=_minute(0), stop=_minute(800), granularity_s=60.0)
+        assert str(e.value) == (
+            "Less than 100.000000% of datapoints overlap in this timespan (12.13%)"
+        )
+        for df in pair.values():
+            df.unpersist()
+
+
+def test_mixed_local_and_plain_inputs_keep_the_spark_plan(spark, tier_frames):
+    local, plain = tier_frames
+    before = _job_ids(spark)
+    got = _aligned_rows({"a": local["a"], "b": plain["b"]}, needed_overlap=50.0)
+    assert _job_ids(spark) != before, "a non-local series must take the Spark plan"
+    assert got == _aligned_rows({"a": plain["a"], "b": plain["b"]}, needed_overlap=50.0)
+
+
+def test_driver_tier_persists_no_grid(spark, tier_frames):
+    local, _plain = tier_frames
+    jsc = spark.sparkContext._jsc
+    # compared by id: earlier tests' checkpoints may be cleaned meanwhile
+    persisted = set(jsc.getPersistentRDDs().keySet())
+    for _ in range(20):
+        align_series({"a": local["a"], "b": local["b"]}, fill=None, needed_overlap=50.0).collect()
+    assert set(jsc.getPersistentRDDs().keySet()) <= persisted
