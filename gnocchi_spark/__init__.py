@@ -137,7 +137,6 @@ _EXPORTS: dict[str, tuple[str, str]] = {
         "read_measures_stream",
     ),
     "streaming_rollup": ("gnocchi_spark.streaming.ingest", "streaming_rollup"),
-    "start_merge_sink": ("gnocchi_spark.streaming.ingest", "start_merge_sink"),
     "streaming_nb_counts": (
         "gnocchi_spark.streaming.ingest",
         "streaming_nb_counts",

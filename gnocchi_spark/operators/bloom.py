@@ -141,10 +141,10 @@ def batch_dedup_against_corpus(
     exact bit pattern is part of the contract.
 
     The verify join's left side is only the candidate rows; its right
-    side is the corpus keyed by ``key_col`` — at 100 TB use a bucketed
-    corpus table on ``key_col`` so the verify is a co-located join
-    (operators/writer.py), and the non-candidate majority of the batch
-    never shuffles at all.
+    side is the corpus keyed by ``key_col`` — at 100 TB store the
+    corpus bucketed on ``key_col`` (``bucketBy``) so the verify is a
+    co-located join, and the non-candidate majority of the batch never
+    shuffles at all.
     """
     bloom = bloom_build(corpus, F.col(key_col), n_bits, k)
     probed = bloom_membership(batch, bloom, F.col(key_col), n_bits, k)

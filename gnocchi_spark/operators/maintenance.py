@@ -9,11 +9,13 @@ declarative DataFrame job a scheduler fires:
 - resource end-of-life when every metric is inactive (chef.py:103-184)
 - ingestion backlog report (incoming/__init__.py:202-218)
 
-Scale notes: retention compiles to a partition-prunable predicate
-(bucket_ts >= horizon) — on a date-partitioned rollup table this is a
-metadata-only partition drop, never a scan-and-rewrite.  Expunge is an
-anti-join against a tiny broadcast list.  Inactivity is one
-aggregation over the metrics dimension — no fact-table scan at all.
+Rollup compaction is ``SnapshotStore.compact()`` followed by
+``vacuum()`` (operators/store.py).
+
+Scale notes: retention is one metric-keyed window max feeding a
+filter.  Expunge is an anti-join against a tiny broadcast list.
+Inactivity is one aggregation over the metrics dimension — no
+fact-table scan at all.
 """
 
 from __future__ import annotations
@@ -109,44 +111,6 @@ def resources_to_end(
         .where(F.col("__newest") < F.lit(moment))
         .select("resource_id", F.lit(now).alias("ended_at"))
     )
-
-
-def compact_frozen_partitions(
-    spark,
-    table_dir: str,
-    frozen_before: datetime.date,
-    partition_col: str = "bucket_day",
-    target_files_per_partition: int = 1,
-) -> int:
-    """Compact rollup partitions past the mutable window into few large
-    files — the table-maintenance analogue of the reference compressing
-    splits once they leave the back-window
-    (storage/__init__.py:454-459,529-550; Delta's ``OPTIMIZE``).
-
-    Only partitions older than ``frozen_before`` are rewritten (dynamic
-    partition overwrite); the mutable tail is untouched, so compaction
-    never races the merge sink.  Returns the number of partitions
-    compacted.
-    """
-    from pyspark.sql import functions as F
-
-    try:
-        df = spark.read.parquet(table_dir)
-    except Exception:
-        return 0
-    frozen = df.where(F.col(partition_col) < F.lit(frozen_before))
-    days = [r[0] for r in frozen.select(partition_col).distinct().collect()]
-    if not days:
-        return 0
-    from gnocchi_spark.operators.writer import staged_partition_overwrite
-
-    compacted = frozen.repartition(
-        max(1, len(days) * target_files_per_partition), partition_col
-    )
-    # stage-then-overwrite: never rewrite partitions from a plan that
-    # reads the files being replaced
-    staged_partition_overwrite(compacted, table_dir, partition_col)
-    return len(days)
 
 
 def backlog_report(

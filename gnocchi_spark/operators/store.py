@@ -1,15 +1,15 @@
 """Snapshot-isolated parquet store: manifest-pinned reads, optimistic
 atomic commits, sack-granular merge rewrites.
 
-Why this exists: the parquet stand-ins for the reference's mutable
-split merge (streaming/ingest.merge_batch_into_rollup, maintenance.
-compact_frozen_partitions) are read-modify-OVERWRITE — the merged plan
-reads the very files the overwrite deletes, and a concurrent reader
-can catch the table half-rewritten.  Staging (writer.
-staged_partition_overwrite) fixes the self-read cycle but not reader
-isolation or writer-vs-writer races.  This module fixes both the way
-modern table formats do (Iceberg/Delta — public designs; implemented
-from scratch here):
+Why this exists: it is the one table format every rollup lands in —
+the streaming sinks (streaming/ingest.py: ``store_merge_sink`` and
+``rate_rollup_batch``), the prebuilt history and compaction all write
+through it.  Rewriting a plain parquet directory in place is
+read-modify-OVERWRITE: the merged plan reads the very files the
+overwrite deletes, a concurrent reader can catch the table
+half-rewritten, and two writers can race.  This module avoids all
+three the way modern table formats do (Iceberg/Delta — public designs;
+implemented from scratch here):
 
 - Data files are IMMUTABLE.  A commit writes new files and publishes a
   new manifest listing the table's complete file set; nothing a live
@@ -297,7 +297,7 @@ class SnapshotStore:
         sack: it writes and commits nothing and returns the current
         manifest (None for an empty store).
 
-        Unlike merge_batch_into_rollup's overwrite, the plan reads old
+        Unlike an in-place overwrite, the plan reads old
         files that stay on disk until vacuum — no self-read cycle, no
         reader ever sees a partial table.  On conflict the merge is
         recomputed against the refreshed snapshot (the loser's work is
@@ -397,8 +397,9 @@ def store_merge_sink(
     key_cols: Sequence[str] = ("metric_id", "granularity", "bucket_ts"),
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch adapter: writeStream.foreachBatch(
-    store_merge_sink(store)) gives the streaming merge sink snapshot
-    isolation instead of the staged-overwrite stand-in."""
+    store_merge_sink(store)) upserts every micro-batch by ``key_cols``.
+    It serves append and update output modes alike, and a replayed
+    epoch re-applies to the same result."""
 
     def _sink(batch_df: DataFrame, _epoch_id: int) -> None:
         store.merge(batch_df, key_cols=key_cols)

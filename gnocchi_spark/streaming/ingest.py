@@ -7,15 +7,18 @@ re-expressed as Structured Streaming:
 ===========================  =========================================
 Reference concept            Spark equivalent here
 ===========================  =========================================
-sack (ingestion shard)       shuffle partition of groupBy(metric_id)
+sack (ingestion shard)       shuffle partition of groupBy(metric_id);
+                             the store's data files are sack-keyed
 back_window late bound       ``withWatermark(ts, back_window x gran)``;
                              older points silently dropped, matching
                              BoundTimeSerie.set_values
                              (carbonara.py:321-373,465-476)
 mutable tail splits          streaming state (update mode) merged into
-                             the table per micro-batch
+                             a ``SnapshotStore`` per micro-batch
+                             (``foreachBatch(store_merge_sink(store))``)
 frozen splits                watermark-finalized windows (append mode
-                             emits each bucket exactly once)
+                             emits each bucket exactly once), through
+                             the same store sink
 refresh-on-read              ``read_with_tail`` — union of the rollup
                              table and an on-the-fly aggregation of
                              not-yet-processed measures
@@ -25,19 +28,21 @@ refresh-on-read              ``read_with_tail`` — union of the rollup
 Scale design: the only shuffle is the windowed groupBy keyed
 (metric_id, window) — state is per-bucket partial aggregates, uniform
 across metrics (no hot keys: bucket count per metric is bounded by the
-policy).  The merge sink rewrites only the partitions a micro-batch
-touches (dynamic partition overwrite on bucket_day), which is the
-parquet equivalent of the reference's rewrite-mutable /
-compress-frozen split lifecycle; on Delta Lake the same batch function
-becomes a keyed ``MERGE INTO``.
+policy).  Every sink writes through ``SnapshotStore.merge``, which
+rewrites only the sacks a micro-batch touches and publishes them with
+one atomic manifest commit — the equivalent of the reference's
+rewrite-mutable / compress-frozen split lifecycle, with readers pinned
+to older manifests left undisturbed.  Merging by key makes a replayed
+epoch idempotent, so a restart from the checkpoint converges to the
+batch recompute.
 
 ``rate:*`` methods need the previous raw point per metric (lag state,
 storage/__init__.py:618-622).  Rate aggregates are not mergeable
 partials, so the windowed streaming aggregation can't host them;
-``start_rate_merge_sink`` implements the reference's own answer — each
+``rate_rollup_batch`` implements the reference's own answer — each
 micro-batch re-reads the raw back-window (+1 granularity of slack for
 the predecessor point) and recomputes every bucket from the earliest
-new point forward, merging into the rollup table.
+new point forward, merging into the rollup store.
 """
 
 from __future__ import annotations
@@ -50,6 +55,7 @@ from pyspark.sql import types as T
 
 from gnocchi_spark.functions.aggregates import agg_expr, safe_alias, std_having
 from gnocchi_spark.functions.timeutil import granularity_label, granularity_seconds
+from gnocchi_spark.operators.store import SnapshotStore
 from gnocchi_spark.policy import parse_method
 
 MEASURES_SCHEMA = T.StructType(
@@ -87,7 +93,7 @@ def _window_aggs(
         if base == "rate":
             raise ValueError(
                 "rate:* needs per-metric lag state; use "
-                "start_rate_merge_sink (micro-batch re-read) instead of "
+                "rate_rollup_batch (micro-batch re-read) instead of "
                 "the windowed streaming aggregation"
             )
         aggs.append(agg_expr(m, value=value_col, ts=ts_col).alias(safe_alias(m)))
@@ -139,100 +145,10 @@ def streaming_rollup(
     )
 
 
-def start_append_sink(
-    rollup_stream: DataFrame,
-    table_dir: str,
-    checkpoint_dir: str,
-    trigger_available_now: bool = True,
-):
-    """Frozen-split path: append mode emits each (metric, bucket) once,
-    when the watermark passes the window end — the streaming analogue
-    of compress-once-immutable (storage/__init__.py:454-459,529-550).
-    Append-only parquet, no rewrite, no merge."""
-    writer = (
-        rollup_stream.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", table_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def merge_batch_into_rollup(
-    batch_df: DataFrame,
-    table_dir: str,
-    key_cols: Sequence[str] = ("metric_id", "granularity", "bucket_ts"),
-) -> None:
-    """Mutable-tail path: upsert a micro-batch of (re)computed buckets
-    into the rollup table, rewriting only the touched bucket_day
-    partitions (dynamic partition overwrite).
-
-    Parquet stand-in for ``MERGE INTO rollups USING batch ON keys``;
-    the reference's equivalent is _update_metric_splits re-reading and
-    merging mutable splits (storage/__init__.py:370-430).
-    """
-    from gnocchi_spark.operators.writer import staged_partition_overwrite
-
-    spark = batch_df.sparkSession
-    batch_df = batch_df.withColumn("bucket_day", F.to_date("bucket_ts"))
-    try:
-        existing = spark.read.parquet(table_dir)
-        has_existing = True
-    except Exception:
-        has_existing = False
-    if not has_existing:
-        batch_df.write.mode("append").partitionBy("bucket_day").parquet(table_dir)
-        return
-    days = [r[0] for r in batch_df.select("bucket_day").distinct().collect()]
-    affected = existing.where(F.col("bucket_day").isin(days))
-    keep = affected.join(
-        batch_df.select(*key_cols).distinct(), on=list(key_cols), how="left_anti"
-    )
-    # stage-then-overwrite: the merged plan reads the files the dynamic
-    # overwrite deletes; staging breaks that cycle durably (persist()
-    # only mitigated it — cache eviction mid-overwrite could recompute
-    # from removed files)
-    staged_partition_overwrite(keep.unionByName(batch_df), table_dir, "bucket_day")
-
-
-def start_merge_sink(
-    rollup_stream: DataFrame,
-    table_dir: str,
-    checkpoint_dir: str,
-    trigger_available_now: bool = True,
-):
-    """Update-mode sink: every trigger re-emits buckets that changed and
-    merges them into the table — late-but-within-back-window points
-    update their bucket, exactly the reference's partial-recompute +
-    split merge (storage/__init__.py:643-668).
-
-    Crash-restart: the checkpointed offsets make a death anywhere in a
-    micro-batch replayable, and ``merge_batch_into_rollup`` is
-    idempotent by key, so the replayed epoch converges to the batch
-    recompute — the reference's measures-survive-daemon-death contract
-    (chef.py:383-424); proven in tests/test_restart_recovery.py.  The
-    one window plain parquet cannot close (a death inside the dynamic
-    overwrite's own commit) is closed by routing the sink through the
-    snapshot store instead: ``writeStream.foreachBatch(
-    store_merge_sink(SnapshotStore(root)))`` (operators/store.py)."""
-    writer = (
-        rollup_stream.writeStream.outputMode("update")
-        .foreachBatch(
-            lambda df, _epoch: merge_batch_into_rollup(df, table_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def rate_rollup_batch(
     batch_df: DataFrame,
-    raw_store_dir: str,
-    table_dir: str,
+    raw_store: SnapshotStore,
+    rollup_store: SnapshotStore,
     methods: Sequence[str],
     granularity: float | str,
     back_window_seconds: float,
@@ -245,7 +161,9 @@ def rate_rollup_batch(
     each point's raw predecessor, so instead of merging rate aggregates
     (impossible: they are not mergeable partials) every batch
 
-    1. lands its raw points in the raw store,
+    1. merges its raw points into ``raw_store`` keyed by (metric, ts),
+       so a replayed epoch replaces its own points instead of adding
+       them a second time,
     2. drops points older than (per-metric newest ts - back_window) —
        BoundTimeSerie truncation (carbonara.py:321-373),
     3. re-reads the store from just before the earliest new bucket
@@ -253,7 +171,16 @@ def rate_rollup_batch(
        point, the "+1" in the reference), and
     4. recomputes every bucket >= that earliest new bucket per metric —
        the reference's recompute-from-first-new-timestamp — merging the
-       result into the rollup table.
+       result into ``rollup_store``.
+
+    Bind it as the ``foreachBatch`` body of a query over the RAW
+    measure stream; no streaming aggregation state is kept (the raw
+    store plus the re-read IS the lag state)::
+
+        measures.writeStream.foreachBatch(
+            lambda df, _epoch: rate_rollup_batch(
+                df, raw_store, rollup_store, ["rate:mean"], 60.0, 600)
+        ).option("checkpointLocation", ckpt).start()
 
     All heavy steps are batch DataFrame plans (the lag window shuffles
     by metric only for the affected metrics' re-read slice).
@@ -261,11 +188,10 @@ def rate_rollup_batch(
     from gnocchi_spark.functions.timeutil import truncate_to_bucket
     from gnocchi_spark.operators.rollup import rollup
 
-    spark = batch_df.sparkSession
     if not batch_df.take(1):
         return
-    batch_df.write.mode("append").parquet(raw_store_dir)
-    store = spark.read.parquet(raw_store_dir)
+    raw_store.merge(batch_df, key_cols=(metric_col, ts_col))
+    store = raw_store.read(batch_df.sparkSession)
 
     # back-window truncation against the newest point per metric
     newest = store.groupBy(F.col(metric_col).alias("__m")).agg(
@@ -301,39 +227,7 @@ def rate_rollup_batch(
         )
         .drop("__m", "__b0")
     )
-    merge_batch_into_rollup(recomputed, table_dir)
-
-
-def start_rate_merge_sink(
-    measures_stream: DataFrame,
-    raw_store_dir: str,
-    table_dir: str,
-    checkpoint_dir: str,
-    methods: Sequence[str],
-    granularity: float | str,
-    back_window_seconds: float,
-    trigger_available_now: bool = True,
-):
-    """Continuous ``rate:*`` rollups: foreachBatch over the RAW measure
-    stream (no streaming aggregation state — the raw store plus re-read
-    IS the lag state, exactly the reference's design)."""
-    writer = (
-        measures_stream.writeStream.outputMode("append")
-        .foreachBatch(
-            lambda df, _epoch: rate_rollup_batch(
-                df,
-                raw_store_dir,
-                table_dir,
-                methods,
-                granularity,
-                back_window_seconds,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    rollup_store.merge(recomputed)
 
 
 def read_with_tail(

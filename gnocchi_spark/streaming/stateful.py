@@ -5,7 +5,7 @@ aggregation Spark can express with built-in windowed state.  Two
 gnocchi semantics need PER-METRIC CARRIED STATE instead:
 
 - ``rate:*`` pre-diffing needs each metric's previous raw point.  The
-  shipped solution (ingest.start_rate_merge_sink) re-reads the raw
+  shipped solution (ingest.rate_rollup_batch) re-reads the raw
   back window per micro-batch — correct for out-of-order data, but it
   re-reads.  ``stateful_rate_stream`` here is the in-order fast path:
   state = the metric's last (ts, value); each micro-batch diffs
@@ -27,7 +27,7 @@ Scale/correctness posture:
 - OUT-OF-ORDER LIMIT (documented, enforced): a point at or before the
   metric's carried last_ts cannot rewrite history — it is counted in
   ``n_stale`` and dropped, matching the in-order contract.  Streams
-  that need late-point rewrites use start_rate_merge_sink instead.
+  that need late-point rewrites use rate_rollup_batch instead.
 """
 
 from __future__ import annotations

@@ -168,35 +168,6 @@ def test_assign_policy_first_match(spark):
     }
 
 
-def test_compact_frozen_partitions(spark, tmp_path):
-    import datetime
-
-    from pyspark.sql import functions as F
-
-    from gnocchi_spark.operators.maintenance import compact_frozen_partitions
-
-    table = str(tmp_path / "rollups")
-    rows = [
-        ("m1", datetime.date(2026, 1, d), float(i))
-        for d in (1, 2, 10)
-        for i in range(20)
-    ]
-    df = spark.createDataFrame(rows, ["metric_id", "bucket_day", "value"])
-    # many small files per partition
-    df.repartition(10).write.partitionBy("bucket_day").parquet(table)
-    n = compact_frozen_partitions(
-        spark, table, frozen_before=datetime.date(2026, 1, 5)
-    )
-    assert n == 2  # Jan 1 + Jan 2 compacted; Jan 10 (mutable) untouched
-    back = spark.read.parquet(table)
-    assert back.count() == 60
-    assert back.groupBy("bucket_day").count().where(F.col("count") != 20).count() == 0
-    import glob
-
-    frozen_files = glob.glob(f"{table}/bucket_day=2026-01-01/*.parquet")
-    assert len(frozen_files) <= 2  # compacted from ~10 small files
-
-
 def test_parse_timestamp_forms():
     import datetime
 

@@ -6,18 +6,17 @@ processed — gnocchi's chef leaves sack contents in place until the
 aggregation that consumed them has been durably written
 (/root/reference/gnocchi/chef.py:383-424).  The Spark analogue is the
 streaming checkpoint: offsets are WAL-logged before a micro-batch runs,
-so any death is replayed from the last committed epoch.  These tests
-kill a run mid-stream three different ways and assert the restarted
-query converges to the batch recompute row-for-row:
+so any death is replayed from the last committed epoch.  Every sink
+writes through ``SnapshotStore.merge``, which is idempotent by key, so
+a replayed epoch re-applies to the same result.  These tests kill a run
+mid-stream two different ways and assert the restarted query converges
+to the batch recompute row-for-row:
 
-- ``stop()`` between micro-batches (append sink — transactional file
-  sink, exactly-once via _spark_metadata);
-- a fault-injection crash inside ``foreachBatch`` BEFORE the merge
-  sink's destructive overwrite (table untouched, epoch replayed) and
-  AFTER it (epoch re-applied idempotently by key);
+- ``stop()`` between micro-batches (the store sink in append mode;
+  the restart resumes from the checkpoint instead of re-reading);
 - a crash between the snapshot store's data-file write and its O_EXCL
   manifest commit (orphan files only, swept by vacuum — no destructive
-  window exists at all on this path).
+  window exists on this path).
 """
 
 from __future__ import annotations
@@ -29,7 +28,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from gnocchi_spark.operators import store as st
-from gnocchi_spark.operators import writer as wr
 from gnocchi_spark.operators.rollup import rollup_wide
 from gnocchi_spark.streaming import ingest as si
 
@@ -78,7 +76,6 @@ def _rows_three_files(n_per_file=40):
 @pytest.fixture()
 def no_hooks():
     yield
-    wr._crash_hook = None
     st._crash_hook = None
 
 
@@ -98,34 +95,36 @@ def _stop_after_first_commit(q, timeout=90.0):
 
 
 def test_append_sink_stop_and_restart_matches_batch(spark, tmp_path, no_hooks):
-    """Kill the append sink between micro-batches, restart from the same
-    checkpoint: the final table equals the batch recompute restricted to
-    watermark-finalized windows, and the restart resumed (did not
-    re-read committed files)."""
+    """Kill the store sink in append mode between micro-batches, restart
+    from the same checkpoint: the final store equals the batch recompute
+    restricted to watermark-finalized windows, and the restart resumed
+    (did not re-read committed files)."""
     landing = str(tmp_path / "landing")
-    table = str(tmp_path / "table")
+    store = st.SnapshotStore(str(tmp_path / "store"), num_sacks=8)
     ckpt = str(tmp_path / "ckpt")
     files = _rows_three_files()
     for rows in files:
         _write_file(spark, landing, rows)
     all_rows = [r for rows in files for r in rows]
 
+    def run(**trigger):
+        agg = si.streaming_rollup(
+            _stream(spark, landing), ["mean", "count"], 300.0, 600
+        )
+        return (
+            agg.writeStream.outputMode("append")
+            .foreachBatch(st.store_merge_sink(store))
+            .option("checkpointLocation", ckpt)
+            .trigger(**trigger)
+            .start()
+        )
+
     # incarnation 1: slow trigger cadence so the stop lands in the gap
-    agg = si.streaming_rollup(_stream(spark, landing), ["mean", "count"], 300.0, 600)
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", table)
-        .option("checkpointLocation", ckpt)
-        .trigger(processingTime="5 seconds")
-        .start()
-    )
-    rows_before_kill = _stop_after_first_commit(q)
+    rows_before_kill = _stop_after_first_commit(run(processingTime="5 seconds"))
     assert 0 < rows_before_kill < len(all_rows)
 
     # incarnation 2: same pipeline, same checkpoint, drain to the end
-    agg2 = si.streaming_rollup(_stream(spark, landing), ["mean", "count"], 300.0, 600)
-    q2 = si.start_append_sink(agg2, table, ckpt)
+    q2 = run(availableNow=True)
     q2.awaitTermination(120)
     replayed = sum(p["numInputRows"] for p in q2.recentProgress)
     # resumed, not reprocessed: the committed prefix is not re-read
@@ -142,96 +141,7 @@ def test_append_sink_stop_and_restart_matches_batch(spark, tmp_path, no_hooks):
         .collect()
     )
     got = (
-        spark.read.parquet(table)
-        .select("metric_id", "bucket_ts", "mean", "count")
-        .orderBy("metric_id", "bucket_ts")
-        .collect()
-    )
-    assert [tuple(r) for r in got] == [tuple(r) for r in exp]
-
-
-def test_merge_sink_crash_around_overwrite_replays_to_batch(
-    spark, tmp_path, no_hooks
-):
-    """Kill the merge sink INSIDE foreachBatch, once before and once
-    after the destructive partition overwrite; both deaths recover by
-    checkpoint replay to exactly the batch recompute.
-
-    Epoch 0 creates the table (plain append — no overwrite, no crash
-    point); epoch 1 takes the staged-overwrite path, where the hooks
-    fire."""
-    landing = str(tmp_path / "landing")
-    table = str(tmp_path / "table")
-    ckpt = str(tmp_path / "ckpt")
-    files = _rows_three_files()
-    for rows in files:
-        _write_file(spark, landing, rows)
-    all_rows = [r for rows in files for r in rows]
-
-    def run(hook):
-        wr._crash_hook = hook
-        agg = si.streaming_rollup(
-            _stream(spark, landing), ["mean", "count"], 300.0, 600
-        )
-        return si.start_merge_sink(agg, table, ckpt)
-
-    def crash_at(point):
-        fired = []
-
-        def hook(name):
-            if name == point and not fired:
-                fired.append(name)
-                raise RuntimeError(point)
-
-        return hook, fired
-
-    def await_failure(q, fired):
-        try:
-            q.awaitTermination(120)
-        except Exception:
-            pass
-        assert fired, "crash point never reached"
-        assert q.exception() is not None, "query did not fail"
-
-    # death 1: after staging, BEFORE the destructive overwrite — the
-    # table must be exactly the committed-prefix state (epoch 0 only)
-    hook, fired = crash_at("staged:post-stage")
-    q = run(hook)
-    await_failure(q, fired)
-    epoch0 = spark.createDataFrame(files[0], schema=si.MEASURES_SCHEMA)
-    exp0 = (
-        rollup_wide(epoch0, ["mean", "count"], 300.0)
-        .select("metric_id", "bucket_ts", "mean", "count")
-        .orderBy("metric_id", "bucket_ts")
-        .collect()
-    )
-    got0 = (
-        spark.read.parquet(table)
-        .select("metric_id", "bucket_ts", "mean", "count")
-        .orderBy("metric_id", "bucket_ts")
-        .collect()
-    )
-    assert [tuple(r) for r in got0] == [tuple(r) for r in exp0]
-
-    # death 2: AFTER the overwrite, before the epoch commits — the
-    # replayed epoch must re-apply idempotently
-    hook, fired = crash_at("staged:post-overwrite")
-    q = run(hook)
-    await_failure(q, fired)
-
-    # final incarnation: no faults, drain everything
-    q = run(None)
-    q.awaitTermination(120)
-
-    batch = spark.createDataFrame(all_rows, schema=si.MEASURES_SCHEMA)
-    exp = (
-        rollup_wide(batch, ["mean", "count"], 300.0)
-        .select("metric_id", "bucket_ts", "mean", "count")
-        .orderBy("metric_id", "bucket_ts")
-        .collect()
-    )
-    got = (
-        spark.read.parquet(table)
+        store.read(spark)
         .select("metric_id", "bucket_ts", "mean", "count")
         .orderBy("metric_id", "bucket_ts")
         .collect()

@@ -1,6 +1,7 @@
 """Streaming ingest tests: watermark finalization (frozen splits),
-late-data drop (back-window), merge sink (mutable tail), and
-refresh-on-read — semantics per SURVEY.md §2.10."""
+late-data drop (back-window), the store sink in update mode (mutable
+tail), the rate:* re-read sink, and refresh-on-read — semantics per
+SURVEY.md §2.10.  Every rollup lands in a SnapshotStore."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gnocchi_spark.operators.rollup import rollup_wide
+from gnocchi_spark.operators.store import SnapshotStore, store_merge_sink
 from gnocchi_spark.streaming import ingest as si
 
 UTC = datetime.timezone.utc
@@ -33,12 +35,29 @@ def dirs(tmp_path):
     }
 
 
+def _store(dirs):
+    return SnapshotStore(dirs["table"], num_sacks=4)
+
+
+def _run_store_sink(rolled, dirs, mode, timeout=120):
+    """The store sink: foreachBatch(store_merge_sink(store)) in append or
+    update mode, drained with availableNow; returns the store's frame."""
+    store = _store(dirs)
+    q = (
+        rolled.writeStream.outputMode(mode)
+        .foreachBatch(store_merge_sink(store))
+        .option("checkpointLocation", dirs["ckpt"])
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(timeout)
+    return store.read(rolled.sparkSession)
+
+
 def _run_append(spark, dirs, methods=("mean", "count", "std"), gran=300.0, bw=600):
     stream = si.read_measures_stream(spark, dirs["landing"])
     agg = si.streaming_rollup(stream, list(methods), gran, bw)
-    q = si.start_append_sink(agg, dirs["table"], dirs["ckpt"])
-    q.awaitTermination(120)
-    return spark.read.parquet(dirs["table"])
+    return _run_store_sink(agg, dirs, "append")
 
 
 def test_append_sink_finalizes_watermarked_windows(spark, dirs):
@@ -93,24 +112,19 @@ def test_merge_sink_updates_mutable_tail(spark, dirs):
     )
     stream = si.read_measures_stream(spark, dirs["landing"])
     agg = si.streaming_rollup(stream, ["mean", "count"], 300.0, 600)
-    q = si.start_merge_sink(agg, dirs["table"], dirs["ckpt"])
-    q.awaitTermination(120)
+    _run_store_sink(agg, dirs, "update")
     # late-but-within-window point updates the 14:00 bucket
     _write_batch(spark, dirs["landing"], [("m1", _t(0, 40), 3.0, 3)])
-    q2 = si.start_merge_sink(agg, dirs["table"], dirs["ckpt"])
-    q2.awaitTermination(120)
     got = {
         r["bucket_ts"].minute: (r["mean"], r["count"])
-        for r in spark.read.parquet(dirs["table"]).collect()
+        for r in _run_store_sink(agg, dirs, "update").collect()
     }
     assert got[0] == (2.0, 2)
     assert got[5] == (5.0, 1)
-    # table is partitioned by bucket_day for partition-scoped rewrites
-    assert "bucket_day" in spark.read.parquet(dirs["table"]).columns
 
 
 def test_streaming_matches_batch_rollup(spark, dirs):
-    # equivalence: merge-sink result == batch rollup_wide over the same
+    # equivalence: store-sink result == batch rollup_wide over the same
     # measures (the correctness contract of the whole streaming path)
     rows = [
         ("m%d" % (i % 3), _t(i % 25, (i * 7) % 60), float(i), i) for i in range(200)
@@ -118,10 +132,8 @@ def test_streaming_matches_batch_rollup(spark, dirs):
     _write_batch(spark, dirs["landing"], rows)
     stream = si.read_measures_stream(spark, dirs["landing"])
     agg = si.streaming_rollup(stream, ["mean", "count", "std"], 300.0, 600)
-    q = si.start_merge_sink(agg, dirs["table"], dirs["ckpt"])
-    q.awaitTermination(180)
     got = (
-        spark.read.parquet(dirs["table"])
+        _run_store_sink(agg, dirs, "update", timeout=180)
         .select("metric_id", "bucket_ts", "mean", "count", "std")
         .orderBy("metric_id", "bucket_ts")
         .collect()
@@ -155,34 +167,45 @@ def test_read_with_tail_refresh_on_read(spark, dirs):
     assert got[5] == (7.0, 1)
 
 
+_RATE_POINTS = [
+    ("m1", _t(0, 0), 1.0, 1),
+    ("m1", _t(0, 30), 3.0, 2),
+    ("m1", _t(1, 10), 6.0, 3),
+]
+
+
+def _rate_values(spark, rollups):
+    return {
+        r["bucket_ts"].replace(tzinfo=None): r["value"]
+        for r in rollups.read(spark).collect()
+    }
+
+
 def test_streaming_rate_late_point_updates_buckets(spark, dirs, tmp_path):
     """Streaming rate:* via micro-batch re-read (storage/__init__.py:
     618-622): a late point inside the back window must update BOTH its
     own bucket's rate and the next bucket's first diff (the predecessor
     changed); a point older than the back window is dropped."""
-    raw_store = str(tmp_path / "raw_store")
+    raw_store = SnapshotStore(str(tmp_path / "raw_store"), num_sacks=4)
+    rollups = _store(dirs)
 
     def _run():
         stream = si.read_measures_stream(spark, dirs["landing"])
-        q = si.start_rate_merge_sink(
-            stream, raw_store, dirs["table"], dirs["ckpt"],
-            ["rate:mean"], 60.0, 600,
+        q = (
+            stream.writeStream.outputMode("append")
+            .foreachBatch(
+                lambda df, _epoch: si.rate_rollup_batch(
+                    df, raw_store, rollups, ["rate:mean"], 60.0, 600
+                )
+            )
+            .option("checkpointLocation", dirs["ckpt"])
+            .trigger(availableNow=True)
+            .start()
         )
         q.awaitTermination(120)
-        return {
-            r["bucket_ts"].replace(tzinfo=None): r["value"]
-            for r in spark.read.parquet(dirs["table"]).collect()
-        }
+        return _rate_values(spark, rollups)
 
-    _write_batch(
-        spark,
-        dirs["landing"],
-        [
-            ("m1", _t(0, 0), 1.0, 1),
-            ("m1", _t(0, 30), 3.0, 2),
-            ("m1", _t(1, 10), 6.0, 3),
-        ],
-    )
+    _write_batch(spark, dirs["landing"], _RATE_POINTS)
     got = _run()
     # bucket 14:00: diffs [3-1]=2 -> mean 2; bucket 14:01: [6-3]=3
     assert got == {_t(0): 2.0, _t(1): 3.0}
@@ -197,6 +220,21 @@ def test_streaming_rate_late_point_updates_buckets(spark, dirs, tmp_path):
     _write_batch(spark, dirs["landing"], [("m1", _t(1, 10) - datetime.timedelta(minutes=20), 50.0, 5)])
     got = _run()
     assert got == {_t(0): 1.5, _t(1): 2.0}
+
+
+def test_rate_batch_replayed_epoch_is_idempotent(spark, tmp_path):
+    """A checkpoint replay after a crash applies the same epoch twice.
+    The raw points merge by (metric_id, ts), so the second application
+    replaces them instead of adding duplicates, and the served rates
+    stay those of one application (duplicated points would read 0.667 /
+    1.5: each copy adds a zero diff)."""
+    raw_store = SnapshotStore(str(tmp_path / "raw_store"), num_sacks=4)
+    rollups = SnapshotStore(str(tmp_path / "rollups"), num_sacks=4)
+    epoch = spark.createDataFrame(_RATE_POINTS, schema=si.MEASURES_SCHEMA)
+    for _ in range(2):
+        si.rate_rollup_batch(epoch, raw_store, rollups, ["rate:mean"], 60.0, 600)
+    assert _rate_values(spark, rollups) == {_t(0): 2.0, _t(1): 3.0}
+    assert raw_store.read(spark).count() == len(_RATE_POINTS)
 
 
 def test_influx_lines_stream_to_rollup(spark, dirs):
@@ -226,11 +264,9 @@ def test_influx_lines_stream_to_rollup(spark, dirs):
         F.lit(None).cast("long").alias("seq"),
     )
     agg = si.streaming_rollup(measures, ["mean", "count"], 300.0, 600)
-    q = si.start_append_sink(agg, dirs["table"], dirs["ckpt"])
-    q.awaitTermination(120)
     got = {
         (r["metric_id"], r["bucket_ts"].minute): (r["mean"], r["count"])
-        for r in spark.read.parquet(dirs["table"]).collect()
+        for r in _run_store_sink(agg, dirs, "append").collect()
     }
     assert got[("h1/cpu.value", 0)] == (10.0, 1)
     assert got[("h1/cpu.value", 5)] == (20.0, 1)
