@@ -130,7 +130,6 @@ _EXPORTS: dict[str, tuple[str, str]] = {
     "sessionize": ("gnocchi_spark.operators.asof", "sessionize"),
     # snapshot store
     "SnapshotStore": ("gnocchi_spark.operators.store", "SnapshotStore"),
-    "store_merge_sink": ("gnocchi_spark.operators.store", "store_merge_sink"),
     # structured streaming ingest
     "read_measures_stream": (
         "gnocchi_spark.streaming.ingest",

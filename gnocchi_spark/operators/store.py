@@ -2,9 +2,10 @@
 atomic commits, sack-granular merge rewrites.
 
 Why this exists: it is the one table format every rollup lands in —
-the streaming sinks (streaming/ingest.py: ``store_merge_sink`` and
-``rate_rollup_batch``), the prebuilt history and compaction all write
-through it.  Rewriting a plain parquet directory in place is
+the streaming sinks (``foreachBatch(lambda df, _epoch:
+store.merge(melt_rollup(df, methods, g)))`` and
+``ingest.rate_rollup_batch``), the prebuilt history and compaction all
+write through it.  Rewriting a plain parquet directory in place is
 read-modify-OVERWRITE: the merged plan reads the very files the
 overwrite deletes, a concurrent reader can catch the table
 half-rewritten, and two writers can race.  This module avoids all
@@ -49,7 +50,7 @@ import shutil
 import time
 import uuid
 from dataclasses import dataclass
-from typing import Callable, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -391,17 +392,3 @@ class SnapshotStore:
                 shutil.rmtree(dirpath, ignore_errors=True)
         return removed
 
-
-def store_merge_sink(
-    store: SnapshotStore,
-    key_cols: Sequence[str] = ("metric_id", "granularity", "bucket_ts"),
-) -> Callable[[DataFrame, int], None]:
-    """foreachBatch adapter: writeStream.foreachBatch(
-    store_merge_sink(store)) upserts every micro-batch by ``key_cols``.
-    It serves append and update output modes alike, and a replayed
-    epoch re-applies to the same result."""
-
-    def _sink(batch_df: DataFrame, _epoch_id: int) -> None:
-        store.merge(batch_df, key_cols=key_cols)
-
-    return _sink

@@ -13,9 +13,11 @@ back_window late bound       ``withWatermark(ts, back_window x gran)``;
                              older points silently dropped, matching
                              BoundTimeSerie.set_values
                              (carbonara.py:321-373,465-476)
-mutable tail splits          streaming state (update mode) merged into
-                             a ``SnapshotStore`` per micro-batch
-                             (``foreachBatch(store_merge_sink(store))``)
+mutable tail splits          streaming state (update mode) melted to
+                             the served long layout and merged into a
+                             ``SnapshotStore`` per micro-batch
+                             (``foreachBatch(lambda df, _epoch: store.
+                             merge(melt_rollup(df, methods, g)))``)
 frozen splits                watermark-finalized windows (append mode
                              emits each bucket exactly once), through
                              the same store sink

@@ -1,33 +1,21 @@
 """Custom stateful streaming operators via applyInPandasWithState.
 
 The tumbling/session-window rollups in streaming/ingest.py cover every
-aggregation Spark can express with built-in windowed state.  Two
-gnocchi semantics need PER-METRIC CARRIED STATE instead:
+aggregation Spark can express with built-in windowed state.
+Cross-batch exact dedup needs CARRIED STATE keyed by content hash
+instead: ``streaming_dedup_stream`` keeps one (first_doc_id, n_seen)
+tuple per distinct hash and emits each hash's first occurrence.
 
-- ``rate:*`` pre-diffing needs each metric's previous raw point.  The
-  shipped solution (ingest.rate_rollup_batch) re-reads the raw
-  back window per micro-batch — correct for out-of-order data, but it
-  re-reads.  ``stateful_rate_stream`` here is the in-order fast path:
-  state = the metric's last (ts, value); each micro-batch diffs
-  against it without touching storage.  (The reference's metricd
-  equivalent: carbonara re-reads back_window+1 — storage/
-  __init__.py:618-622; the state variant has no reference twin, it is
-  what Spark's state store makes possible.)
-- last-value serving ("current value of every metric") is the same
-  state with a different emit rule.
+``rate:*`` has no operator here.  It needs each metric's previous raw
+point, and its one path is ``ingest.rate_rollup_batch``: the reference
+metricd's re-read of back_window + 1 raw points (storage/
+__init__.py:618-622), bound as a ``foreachBatch`` body, so late points
+rewrite their buckets and a replayed epoch is idempotent.
 
-Scale/correctness posture:
-
-- State is keyed by metric — the shuffle is the same metric-keyed
-  exchange every rollup already does, and the state store scales
-  horizontally with executors (RocksDB-backed in production configs).
-- State size is two scalars per metric: bounded by metric cardinality,
-  not traffic.  An idle-metric TTL evicts via processing-time timeout
-  so a churning metric population cannot grow state without bound.
-- OUT-OF-ORDER LIMIT (documented, enforced): a point at or before the
-  metric's carried last_ts cannot rewrite history — it is counted in
-  ``n_stale`` and dropped, matching the in-order contract.  Streams
-  that need late-point rewrites use rate_rollup_batch instead.
+Scale posture: the group key IS the content hash, so the state shuffle
+is uniform and the state store scales horizontally with executors
+(RocksDB-backed in production configs); state is bounded by distinct
+content, or by new-hash rate x TTL with ``ttl_minutes``.
 """
 
 from __future__ import annotations
@@ -38,104 +26,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-RATE_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("metric_id", T.StringType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("rate", T.DoubleType()),
-        T.StructField("n_stale", T.LongType()),
-    ]
-)
-
-# (last_ts_us, last_value) — epoch micros keep the state tuple plain
-# (timestamps in state structs round-trip as micros anyway)
-RATE_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("last_ts_us", T.LongType()),
-        T.StructField("last_value", T.DoubleType()),
-    ]
-)
-
-
-def _rate_fn(ttl_minutes: int):
-    def fn(
-        key: Tuple[str],
-        pdf_iter: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        last_ts_us, last_value = (
-            state.get if state.exists else (None, None)
-        )
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "seq"], kind="stable")
-            ts_us = (pdf["ts"].astype("int64") // 1000).to_numpy()
-            vals = pdf["value"].to_numpy()
-            out_ts, out_rate, n_stale = [], [], 0
-            for t_us, v in zip(ts_us, vals):
-                if last_ts_us is not None and t_us <= last_ts_us:
-                    n_stale += 1  # in-order contract: no history rewrite
-                    continue
-                if last_ts_us is not None:
-                    out_ts.append(t_us)
-                    out_rate.append(v - last_value)
-                last_ts_us, last_value = int(t_us), float(v)
-            if out_ts:
-                yield pd.DataFrame(
-                    {
-                        "metric_id": key[0],
-                        "ts": pd.to_datetime(pd.Series(out_ts), unit="us"),
-                        "rate": pd.Series(out_rate, dtype="float64"),
-                        "n_stale": pd.Series(
-                            [n_stale] * len(out_ts), dtype="int64"
-                        ),
-                    }
-                )
-            elif n_stale:
-                # no emittable diffs, but surface the stale-drop count
-                yield pd.DataFrame(
-                    {
-                        "metric_id": [key[0]],
-                        "ts": [pd.NaT],
-                        "rate": [float("nan")],
-                        "n_stale": [n_stale],
-                    }
-                )
-        if last_ts_us is not None:
-            state.update((int(last_ts_us), float(last_value)))
-            state.setTimeoutDuration(ttl_minutes * 60_000)
-
-    return fn
-
-
-def stateful_rate_stream(
-    measures: DataFrame,
-    metric_col: str = "metric_id",
-    ttl_minutes: int = 60,
-) -> DataFrame:
-    """Per-point rate stream: value deltas against each metric's carried
-    last point (state), no storage re-read.  Emits
-    (metric_id, ts, rate, n_stale); rows with a null ts carry only a
-    stale-drop count.  Downstream bucketing is a plain rollup over the
-    rate column.  Idle metrics evict after ``ttl_minutes`` of no
-    traffic (processing-time timeout).
-
-    Because of that timeout, every trigger asks for one more no-data
-    micro-batch, so a ``trigger(availableNow=True)`` query over this
-    stream never terminates and ``processAllAvailable()`` never
-    returns.  Stop such a query explicitly once its input is committed
-    (``tests/test_stateful.py``'s ``_drain`` helper shows the pattern)."""
-    return measures.groupBy(metric_col).applyInPandasWithState(
-        _rate_fn(ttl_minutes),
-        outputStructType=RATE_OUT_SCHEMA,
-        stateStructType=RATE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
 
 DEDUP_OUT_SCHEMA = T.StructType(
     [
@@ -197,10 +87,10 @@ def streaming_dedup_stream(
     dedup ("suppress repeats seen within the last X minutes") for
     unbounded-vocabulary streams where exact forever-dedup would grow
     state without bound; None means exact semantics.  With
-    ``ttl_minutes`` the state uses a processing-time timeout, so, as for
-    stateful_rate_stream, a ``trigger(availableNow=True)`` query never
-    terminates and ``processAllAvailable()`` never returns: stop it
-    explicitly once its input is committed.
+    ``ttl_minutes`` the state uses a processing-time timeout, so a
+    ``trigger(availableNow=True)`` query never terminates and
+    ``processAllAvailable()`` never returns: stop it explicitly once
+    its input is committed.
 
     Input must carry (doc_id, ``hash_col``); compute the hash map-side
     (md5 of the normalized text) BEFORE this operator so the only

@@ -28,7 +28,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gnocchi_spark.operators import store as st
-from gnocchi_spark.operators.rollup import rollup_wide
+from gnocchi_spark.operators.rollup import melt_rollup, rollup
 from gnocchi_spark.streaming import ingest as si
 
 
@@ -79,6 +79,20 @@ def no_hooks():
     st._crash_hook = None
 
 
+_METHODS = ["mean", "count"]
+_COLS = ["metric_id", "method", "bucket_ts", "value"]
+
+
+def _sink(store):
+    """The store sink: each micro-batch melted to the served long layout
+    and merged by key."""
+    return lambda df, _epoch: store.merge(melt_rollup(df, _METHODS, 300.0))
+
+
+def _stored(spark, store):
+    return store.read(spark).select(*_COLS).orderBy(*_COLS[:3]).collect()
+
+
 def _stop_after_first_commit(q, timeout=90.0):
     """Poll until at least one micro-batch with input rows committed,
     then stop() — a kill in the idle gap between micro-batches."""
@@ -108,12 +122,10 @@ def test_append_sink_stop_and_restart_matches_batch(spark, tmp_path, no_hooks):
     all_rows = [r for rows in files for r in rows]
 
     def run(**trigger):
-        agg = si.streaming_rollup(
-            _stream(spark, landing), ["mean", "count"], 300.0, 600
-        )
+        agg = si.streaming_rollup(_stream(spark, landing), _METHODS, 300.0, 600)
         return (
             agg.writeStream.outputMode("append")
-            .foreachBatch(st.store_merge_sink(store))
+            .foreachBatch(_sink(store))
             .option("checkpointLocation", ckpt)
             .trigger(**trigger)
             .start()
@@ -134,19 +146,13 @@ def test_append_sink_stop_and_restart_matches_batch(spark, tmp_path, no_hooks):
     batch = spark.createDataFrame(all_rows, schema=si.MEASURES_SCHEMA)
     wm = max(r[1] for r in all_rows) - datetime.timedelta(seconds=600)
     exp = (
-        rollup_wide(batch, ["mean", "count"], 300.0)
+        rollup(batch, _METHODS, 300.0)
         .where(F.col("bucket_ts") + F.expr("INTERVAL 300 SECONDS") <= F.lit(wm))
-        .select("metric_id", "bucket_ts", "mean", "count")
-        .orderBy("metric_id", "bucket_ts")
+        .select(*_COLS)
+        .orderBy(*_COLS[:3])
         .collect()
     )
-    got = (
-        store.read(spark)
-        .select("metric_id", "bucket_ts", "mean", "count")
-        .orderBy("metric_id", "bucket_ts")
-        .collect()
-    )
-    assert [tuple(r) for r in got] == [tuple(r) for r in exp]
+    assert [tuple(r) for r in _stored(spark, store)] == [tuple(r) for r in exp]
 
 
 def test_snapshot_store_sink_crash_before_commit_replays_and_vacuums(
@@ -166,12 +172,10 @@ def test_snapshot_store_sink_crash_before_commit_replays_and_vacuums(
     all_rows = [r for rows in files for r in rows]
 
     def run():
-        agg = si.streaming_rollup(
-            _stream(spark, landing), ["mean", "count"], 300.0, 600
-        )
+        agg = si.streaming_rollup(_stream(spark, landing), _METHODS, 300.0, 600)
         return (
             agg.writeStream.outputMode("update")
-            .foreachBatch(st.store_merge_sink(store))
+            .foreachBatch(_sink(store))
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
@@ -204,26 +208,11 @@ def test_snapshot_store_sink_crash_before_commit_replays_and_vacuums(
 
     batch = spark.createDataFrame(all_rows, schema=si.MEASURES_SCHEMA)
     exp = (
-        rollup_wide(batch, ["mean", "count"], 300.0)
-        .select("metric_id", "bucket_ts", "mean", "count")
-        .orderBy("metric_id", "bucket_ts")
-        .collect()
+        rollup(batch, _METHODS, 300.0).select(*_COLS).orderBy(*_COLS[:3]).collect()
     )
-    got = (
-        store.read(spark)
-        .select("metric_id", "bucket_ts", "mean", "count")
-        .orderBy("metric_id", "bucket_ts")
-        .collect()
-    )
-    assert [tuple(r) for r in got] == [tuple(r) for r in exp]
+    assert [tuple(r) for r in _stored(spark, store)] == [tuple(r) for r in exp]
 
     # the crashed attempt's data files are orphans; vacuum sweeps them
     removed = store.vacuum(keep_versions=1)
     assert removed  # at least the orphaned merge attempt
-    got2 = (
-        store.read(spark)
-        .select("metric_id", "bucket_ts", "mean", "count")
-        .orderBy("metric_id", "bucket_ts")
-        .collect()
-    )
-    assert [tuple(r) for r in got2] == [tuple(r) for r in exp]
+    assert [tuple(r) for r in _stored(spark, store)] == [tuple(r) for r in exp]

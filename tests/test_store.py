@@ -12,7 +12,6 @@ from gnocchi_spark.operators.store import (
     SnapshotFrame,
     SnapshotStore,
     StoreConflict,
-    store_merge_sink,
 )
 
 
@@ -116,15 +115,6 @@ def test_compact_to_one_file_per_sack(spark, tmp_path):
         sacks.setdefault(SnapshotStore._file_sack(p), []).append(p)
     for s, files in sacks.items():
         assert len(files) == 1, f"sack {s} not compacted: {files}"
-
-
-def test_store_merge_sink_adapter(spark, tmp_path):
-    store = SnapshotStore(str(tmp_path / "t"), num_sacks=2)
-    sink = store_merge_sink(store)
-    sink(_rollups(spark, [("a", 60.0, 0, 1.0)]), 0)
-    sink(_rollups(spark, [("a", 60.0, 0, 2.0), ("b", 60.0, 0, 3.0)]), 1)
-    got = {r["metric_id"]: r["value"] for r in store.read(spark).collect()}
-    assert got == {"a": 2.0, "b": 3.0}
 
 
 # -- layout contract: one file per sack, schema in the manifest ----------

@@ -10,8 +10,9 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from gnocchi_spark.operators.rollup import rollup_wide
-from gnocchi_spark.operators.store import SnapshotStore, store_merge_sink
+from gnocchi_spark.operators.read import get_measures
+from gnocchi_spark.operators.rollup import melt_rollup, rollup, rollup_wide
+from gnocchi_spark.operators.store import SnapshotStore
 from gnocchi_spark.streaming import ingest as si
 
 UTC = datetime.timezone.utc
@@ -39,13 +40,14 @@ def _store(dirs):
     return SnapshotStore(dirs["table"], num_sacks=4)
 
 
-def _run_store_sink(rolled, dirs, mode, timeout=120):
-    """The store sink: foreachBatch(store_merge_sink(store)) in append or
-    update mode, drained with availableNow; returns the store's frame."""
+def _run_store_sink(rolled, dirs, mode, methods, g, timeout=120):
+    """The store sink: foreachBatch merging melt_rollup(df, methods, g),
+    the long layout get_measures serves, in append or update mode,
+    drained with availableNow; returns the store's pinned frame."""
     store = _store(dirs)
     q = (
         rolled.writeStream.outputMode(mode)
-        .foreachBatch(store_merge_sink(store))
+        .foreachBatch(lambda df, _epoch: store.merge(melt_rollup(df, methods, g)))
         .option("checkpointLocation", dirs["ckpt"])
         .trigger(availableNow=True)
         .start()
@@ -54,10 +56,18 @@ def _run_store_sink(rolled, dirs, mode, timeout=120):
     return store.read(rolled.sparkSession)
 
 
+def _values(frame):
+    """(metric_id, method, bucket minute) -> value of a long-layout frame."""
+    return {
+        (r["metric_id"], r["method"], r["bucket_ts"].minute): r["value"]
+        for r in frame.collect()
+    }
+
+
 def _run_append(spark, dirs, methods=("mean", "count", "std"), gran=300.0, bw=600):
     stream = si.read_measures_stream(spark, dirs["landing"])
     agg = si.streaming_rollup(stream, list(methods), gran, bw)
-    return _run_store_sink(agg, dirs, "append")
+    return _run_store_sink(agg, dirs, "append", list(methods), gran)
 
 
 def test_append_sink_finalizes_watermarked_windows(spark, dirs):
@@ -71,19 +81,18 @@ def test_append_sink_finalizes_watermarked_windows(spark, dirs):
         ("m1", _t(40, 0), 99.0, 5),  # watermark mover
     ]
     _write_batch(spark, dirs["landing"], rows)
-    got = _run_append(spark, dirs)
-    done = {
-        (r["metric_id"], r["bucket_ts"].minute): (r["mean"], r["count"], r["std"])
-        for r in got.collect()
-    }
+    done = _values(_run_append(spark, dirs))
     # finalized buckets (watermark = 14:40 - 10 min = 14:30 > bucket ends)
-    assert done[("m1", 0)][0] == 2.0 and done[("m1", 0)][1] == 2
-    assert done[("m1", 5)] == (10.0, 1, None)  # std suppressed, count=1
-    assert done[("m2", 0)] == (7.0, 1, None)
+    assert done[("m1", "mean", 0)] == 2.0 and done[("m1", "count", 0)] == 2
+    # std suppressed at count=1: the bucket has no std row
+    assert (done[("m1", "mean", 5)], done[("m1", "count", 5)]) == (10.0, 1)
+    assert ("m1", "std", 5) not in done
+    assert (done[("m2", "mean", 0)], done[("m2", "count", 0)]) == (7.0, 1)
+    assert ("m2", "std", 0) not in done
     # the watermark-moving bucket itself (14:40) is still open: not emitted
-    assert ("m1", 40) not in done
+    assert not [k for k in done if k[0] == "m1" and k[2] == 40]
     # std of the 2-point bucket is the sample std
-    assert done[("m1", 0)][2] == pytest.approx(1.4142135623730951)
+    assert done[("m1", "std", 0)] == pytest.approx(1.4142135623730951)
 
 
 def test_append_sink_drops_late_beyond_back_window(spark, dirs):
@@ -98,8 +107,12 @@ def test_append_sink_drops_late_beyond_back_window(spark, dirs):
     # (older than watermark 14:30) -> silently dropped, bucket unchanged
     _write_batch(spark, dirs["landing"], [("m1", _t(0, 20), 100.0, 3)])
     got2 = _run_append(spark, dirs)
-    rows = [r for r in got2.collect() if r["bucket_ts"].minute == 0]
-    assert len(rows) == 1 and rows[0]["mean"] == 1.0
+    rows = [
+        r
+        for r in got2.collect()
+        if r["bucket_ts"].minute == 0 and r["method"] == "mean"
+    ]
+    assert len(rows) == 1 and rows[0]["value"] == 1.0
 
 
 def test_merge_sink_updates_mutable_tail(spark, dirs):
@@ -111,42 +124,51 @@ def test_merge_sink_updates_mutable_tail(spark, dirs):
         [("m1", _t(0, 10), 1.0, 1), ("m1", _t(5, 0), 5.0, 2)],
     )
     stream = si.read_measures_stream(spark, dirs["landing"])
-    agg = si.streaming_rollup(stream, ["mean", "count"], 300.0, 600)
-    _run_store_sink(agg, dirs, "update")
+    methods = ["mean", "count"]
+    agg = si.streaming_rollup(stream, methods, 300.0, 600)
+    _run_store_sink(agg, dirs, "update", methods, 300.0)
     # late-but-within-window point updates the 14:00 bucket
     _write_batch(spark, dirs["landing"], [("m1", _t(0, 40), 3.0, 3)])
-    got = {
-        r["bucket_ts"].minute: (r["mean"], r["count"])
-        for r in _run_store_sink(agg, dirs, "update").collect()
+    got = _values(_run_store_sink(agg, dirs, "update", methods, 300.0))
+    assert got == {
+        ("m1", "mean", 0): 2.0,
+        ("m1", "count", 0): 2,
+        ("m1", "mean", 5): 5.0,
+        ("m1", "count", 5): 1,
     }
-    assert got[0] == (2.0, 2)
-    assert got[5] == (5.0, 1)
 
 
 def test_streaming_matches_batch_rollup(spark, dirs):
-    # equivalence: store-sink result == batch rollup_wide over the same
-    # measures (the correctness contract of the whole streaming path)
+    # equivalence: store-sink result == batch rollup over the same
+    # measures (the correctness contract of the whole streaming path),
+    # and the streamed store serves get_measures like the batch frame
     rows = [
         ("m%d" % (i % 3), _t(i % 25, (i * 7) % 60), float(i), i) for i in range(200)
     ]
+    methods = ["mean", "count", "std"]
     _write_batch(spark, dirs["landing"], rows)
     stream = si.read_measures_stream(spark, dirs["landing"])
-    agg = si.streaming_rollup(stream, ["mean", "count", "std"], 300.0, 600)
-    got = (
-        _run_store_sink(agg, dirs, "update", timeout=180)
-        .select("metric_id", "bucket_ts", "mean", "count", "std")
-        .orderBy("metric_id", "bucket_ts")
-        .collect()
-    )
+    agg = si.streaming_rollup(stream, methods, 300.0, 600)
+    stored = _run_store_sink(agg, dirs, "update", methods, 300.0, timeout=180)
     batch_df = spark.createDataFrame(rows, schema=si.MEASURES_SCHEMA)
-    exp = (
-        rollup_wide(batch_df, ["mean", "count", "std"], 300.0)
-        .orderBy("metric_id", "bucket_ts")
-        .collect()
-    )
-    assert [tuple(r) for r in got] == [
-        (r["metric_id"], r["bucket_ts"], r["mean"], r["count"], r["std"]) for r in exp
-    ]
+    batch = rollup(batch_df, methods, 300.0)
+    cols = ["metric_id", "method", "granularity", "bucket_ts", "value"]
+    got = stored.select(*cols).orderBy(*cols[:4]).collect()
+    exp = batch.select(*cols).orderBy(*cols[:4]).collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in exp]
+
+    # served reads: the bare pinned frame takes the driver tier, a
+    # transformed one the Spark plan; both equal the batch frame's read
+    tiers = [(stored, True), (stored.select("*"), False)]
+    for m in ("m0", "m1", "m2"):
+        for method in methods:
+            want = [tuple(r) for r in get_measures(batch, m, method, 300.0).collect()]
+            assert want
+            for frame, local in tiers:
+                served = get_measures(frame, m, method, 300.0)
+                plan = served._jdf.queryExecution().analyzed().toString()
+                assert ("LocalRelation" in plan) == local
+                assert [tuple(r) for r in served.collect()] == want
 
 
 def test_read_with_tail_refresh_on_read(spark, dirs):
@@ -263,14 +285,12 @@ def test_influx_lines_stream_to_rollup(spark, dirs):
         "value",
         F.lit(None).cast("long").alias("seq"),
     )
-    agg = si.streaming_rollup(measures, ["mean", "count"], 300.0, 600)
-    got = {
-        (r["metric_id"], r["bucket_ts"].minute): (r["mean"], r["count"])
-        for r in _run_store_sink(agg, dirs, "append").collect()
-    }
-    assert got[("h1/cpu.value", 0)] == (10.0, 1)
-    assert got[("h1/cpu.value", 5)] == (20.0, 1)
-    assert got[("h2/cpu.value", 0)] == (5.0, 1)
+    methods = ["mean", "count"]
+    agg = si.streaming_rollup(measures, methods, 300.0, 600)
+    got = _values(_run_store_sink(agg, dirs, "append", methods, 300.0))
+    for m, minute, mean in (("h1", 0, 10.0), ("h1", 5, 20.0), ("h2", 0, 5.0)):
+        key = f"{m}/cpu.value"
+        assert (got[(key, "mean", minute)], got[(key, "count", minute)]) == (mean, 1)
 
 
 def test_streaming_session_window(spark, dirs, tmp_path):

@@ -4,8 +4,9 @@ SCALE.md claims every streaming sink's state is traffic-bounded —
 window state bounded by the back-window horizon, stateful-operator
 state by live keys x TTL — never by cumulative traffic.  This harness
 produces the evidence: a ~1000-micro-batch soak of the watermarked
-rollup sink (plus a shorter soak of the applyInPandasWithState rate
-operator) against a deterministic rate-micro-batch source with
+rollup sink (plus shorter soaks of the applyInPandasWithState dedup
+operator and the session-window sink) against deterministic
+rate-micro-batch sources with
 
 - a SKEWED key distribution (90% of traffic on one hot metric, the
   rest across 50 cold metrics) — state rows must not follow traffic
@@ -97,8 +98,6 @@ def run_soak(spark, n_batches: int, rows_per_batch: int, which: str = "rollup"):
 
     which = 'rollup': watermarked 5-min tumbling windows, 1 h
     back-window (streaming_rollup — the append/merge sinks' shape).
-    which = 'rate': the applyInPandasWithState per-metric rate operator
-    (state = one row per live metric, processing-time TTL).
     which = 'dedup_ttl' / 'dedup_exact': the streaming exact-dedup
     operator over an unbounded vocabulary, with a 1-minute TTL
     (state must plateau at ~new-hash rate x TTL) vs exact forever
@@ -112,10 +111,7 @@ def run_soak(spark, n_batches: int, rows_per_batch: int, which: str = "rollup"):
         streaming_rollup,
         streaming_session_stats,
     )
-    from gnocchi_spark.streaming.stateful import (
-        stateful_rate_stream,
-        streaming_dedup_stream,
-    )
+    from gnocchi_spark.streaming.stateful import streaming_dedup_stream
 
     mode = "append"
     if which == "rollup":
@@ -125,10 +121,6 @@ def run_soak(spark, n_batches: int, rows_per_batch: int, which: str = "rollup"):
             300.0,
             back_window_seconds=3600.0,
         )
-    elif which == "rate":
-        # the rate operator consumes the full measures contract
-        # (metric_id, ts, value, seq — seq is its in-batch tiebreak)
-        out = stateful_rate_stream(soaked_measures(spark, rows_per_batch))
     elif which == "dedup_ttl":
         out = streaming_dedup_stream(
             soaked_docs(spark, rows_per_batch), ttl_minutes=1
@@ -227,7 +219,6 @@ def main():
     }
     plan = (
         ("rollup", n_batches, rows_per_batch),
-        ("rate", max(100, n_batches // 4), rows_per_batch),
         # r08 (VERDICT r07 next #7): the remaining stateful sinks.
         # dedup runs at a smaller batch so the 1-min-TTL plateau level
         # (~new-hash rate x TTL) stays a readable curve, and long
